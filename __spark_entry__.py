@@ -29,51 +29,6 @@ from pyspark.sql import functions as F
 AS_OF = "1998-08-02"          # orders/lineitem date anchor (max o_orderdate ~2001-08-01)
 EV_AS_OF = "2024-01-31"       # events anchor (events span 2024-01)
 
-# MinHash index directories already built this process, keyed by sf_dir
-# (the index is a pure function of the corpus — see dedup_incremental)
-_MH_INDEX_CACHE: dict[str, str] = {}
-# fitted IVF store directories, keyed by sf_dir (see sim_ivf_indexed)
-_IVF_INDEX_CACHE: dict[str, str] = {}
-# streaming-replay output directories, keyed by sf_dir (see stream_batch_parity)
-_STREAM_PARITY_CACHE: dict[str, str] = {}
-_STREAM_INCR_CACHE: dict[str, str] = {}
-# windowed-aggregate streaming replay outputs, keyed by sf_dir
-_STREAM_WINDOW_CACHE: dict[str, str] = {}
-# ordered-batch late-data replay outputs, keyed by sf_dir
-_STREAM_LATE_CACHE: dict[str, str] = {}
-# stateful-sessionize streaming replay outputs, keyed by sf_dir
-_STREAM_SESSION_CACHE: dict[str, tuple] = {}
-# native session_window streaming replay outputs, keyed by sf_dir
-_STREAM_SESSION_NATIVE_CACHE: dict[str, str] = {}
-_STREAM_LSH_CACHE: dict[str, str] = {}
-# stream-stream join replay outputs, keyed by sf_dir (stream_join_parity)
-_STREAM_JOIN_CACHE: dict[str, str] = {}
-
-_STREAM_EWMA_CACHE: dict[str, str] = {}
-# left-outer stream-stream replay outputs (stream_join_outer_parity)
-_STREAM_OUTER_CACHE: dict[str, str] = {}
-_STREAM_STATIC_CACHE: dict[str, str] = {}
-_SCHEMA_EVO_CACHE: dict[tuple, str] = {}
-_TTRAVEL_CACHE: dict[str, str] = {}
-_PYDS_STREAM_CACHE: dict[str, str] = {}
-_PYDS_SINK_CACHE: dict[str, str] = {}
-_BLOOM_JOIN_CACHE: dict[str, str] = {}
-# bucket-clustered parquet layout dirs, keyed by sf_dir (layout_zone_skip)
-_ZONEMAP_CACHE: dict[str, str] = {}
-
-_STREAM_DEDUP_CACHE: dict[str, str] = {}
-
-_STREAM_TOPK_CACHE: dict[str, str] = {}
-
-_STREAM_CDC_CACHE: dict[str, str] = {}
-
-_CSV_CACHE: dict[str, str] = {}
-
-_VERSION_CACHE: dict[str, str] = {}
-
-_STREAM_HIST_CACHE: dict[str, str] = {}
-
-_SCHEMA_MERGE_CACHE: dict[str, str] = {}
 # fixed deterministic 2×64 projection weights shared by the
 # emb_pca_project query and its oracle (tenth-steps, exactly
 # representable in binary-friendly decimal both engines parse alike)
@@ -92,28 +47,6 @@ _PQ_TEST_BOOKS = [
     for j in range(8)
 ]
 _PQ_TEST_QUERY = [(((i * 13) % 17) - 8) / 20.0 for i in range(64)]
-# staged JSONL corpus files, keyed by sf_dir (see scan_jsonl_corrupt)
-_JSONL_CACHE: dict[str, str] = {}
-# hive-partitioned event datasets, keyed by sf_dir (scan_partition_pruned)
-_PARTITIONED_CACHE: dict[str, str] = {}
-# fitted k-means centroids, keyed by sf_dir (shared by the IVF/kNN queries)
-_CENTROID_CACHE: dict[str, list] = {}
-# materialized co-purchase edge lists, keyed by sf_dir (see
-# _copurchase_edges)
-_EDGE_CACHE: dict[str, str] = {}
-# materialized 3-round LPA label assignments, keyed by sf_dir (see
-# _lpa_labels — shared by graph_lpa_communities and graph_modularity)
-_LPA_CACHE: dict[str, str] = {}
-# materialized EXACT per-vector kNN label-mismatch relation, keyed by
-# sf_dir (see _label_noise_pervec — shared by emb_label_noise and
-# emb_label_noise_probed, which previously each re-ran the full-probe
-# pass: together the most expensive pair in the catalog, r10 VERDICT
-# "What's wrong" #2)
-_LNOISE_CACHE: dict[str, str] = {}
-# embeddings re-keyed as doc_id, staged once per sf_dir (see cross_table_rule)
-_EMB_KEYED_CACHE: dict[str, str] = {}
-# bucketed store directories, keyed by sf_dir (see store_bucketed_merge)
-_BUCKET_STORE_CACHE: dict[str, str] = {}
 
 
 # ---------------------------------------------------------------------------
@@ -129,6 +62,110 @@ def _prep(spark: SparkSession) -> None:
     # driver session built with ANSI off would change cast/overflow/
     # divide-by-zero behavior for the exact same plans
     spark.conf.set("spark.sql.ansi.enabled", "true")
+
+
+# ---------------------------------------------------------------------------
+# memos: the one mechanism behind every per-process memo in this module
+# ---------------------------------------------------------------------------
+#
+# A memo is named by ``(kind, key)``. ``key`` is ``sf_dir`` or a tuple
+# whose first element is ``sf_dir`` (``None`` for process-wide memos):
+# memoized values are pure functions of the tables under ``sf_dir``,
+# which must not change while the process runs. Each entry records a
+# one-pass fingerprint of ``sf_dir`` (entry names, sizes, mtime_ns) when
+# it is built, and every hit re-checks it, so a rewritten table raises
+# StaleMemoError instead of serving a result derived from the old data.
+# Directories live under one process temp root, created lazily under
+# ``tempfile.gettempdir()`` (importing this module — as Spark's Python
+# workers may — creates nothing) and removed at interpreter exit by the
+# process that created it.
+
+_MEMO: dict[tuple, tuple] = {}  # (kind, key) -> (value, sf_dir fingerprint)
+_SCRATCH_ROOT: str | None = None
+
+
+class StaleMemoError(RuntimeError):
+    """A memo hit found the tables under its ``sf_dir`` changed."""
+
+
+def _sf_fingerprint(sf_dir) -> tuple | None:
+    """(name, size, mtime_ns) of every entry directly under a LOCAL
+    ``sf_dir``, in one stat pass; None when it is not a local dir."""
+    if not isinstance(sf_dir, str):
+        return None
+    try:
+        with os.scandir(sf_dir.removeprefix("file:")) as it:
+            return tuple(sorted(
+                (e.name, st.st_size, st.st_mtime_ns)
+                for e in it for st in (e.stat(),)))
+    except OSError:
+        return None
+
+
+def _memo(kind: str, key, build: Callable[[], object]):
+    """``build()``, run once per ``(kind, key)`` per process. A build
+    that raises records nothing, so the next call builds again."""
+    sf_dir = key[0] if isinstance(key, tuple) else key
+    hit = _MEMO.get((kind, key))
+    if hit is not None:
+        value, fp = hit
+        if fp is not None and _sf_fingerprint(sf_dir) != fp:
+            raise StaleMemoError(
+                f"memo {kind!r}: the tables under sf_dir {sf_dir!r} changed "
+                f"after it was built; memos assume an immutable sf_dir")
+        return value
+    fp = _sf_fingerprint(sf_dir)
+    value = build()
+    _MEMO[(kind, key)] = (value, fp)
+    return value
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A fresh directory under the process temp root."""
+    global _SCRATCH_ROOT
+    import tempfile
+
+    if _SCRATCH_ROOT is None:
+        import atexit
+        import shutil
+
+        root, pid = tempfile.mkdtemp(prefix="spark_entry_"), os.getpid()
+
+        def _remove_root():
+            # forked children inherit the handler; only the creator cleans
+            if os.getpid() == pid:
+                shutil.rmtree(root, ignore_errors=True)
+
+        atexit.register(_remove_root)
+        _SCRATCH_ROOT = root
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
+
+
+def _memo_dir(kind: str, key, fill: Callable[[str], None]) -> str:
+    """A scratch directory filled once per ``(kind, key)`` by
+    ``fill(dir)``; a fill that raises leaves no directory behind."""
+    def build():
+        import shutil
+
+        d = _scratch_dir(f"{kind}_")
+        try:
+            fill(d)
+        except BaseException:
+            shutil.rmtree(d, ignore_errors=True)
+            raise
+        return d
+
+    return _memo(kind, key, build)
+
+
+def _materialize_once(spark: SparkSession, kind: str, key,
+                      build: Callable[[], DataFrame]) -> DataFrame:
+    """The relation ``build()`` returns, written as parquet once per
+    ``(kind, key)`` and read back on every call (a fresh scan, so
+    expression ids stay unique per call site)."""
+    d = _memo_dir(kind, key, lambda d: build().write.mode("overwrite")
+                  .parquet(f"{d}/data"))
+    return spark.read.parquet(f"{d}/data")
 
 
 # tables whose downstream work is CPU-heavy PER ROW (tokenize/shingle/
@@ -147,37 +184,30 @@ def _prep(spark: SparkSession) -> None:
 # never by materializing the plan.
 _SPREAD_TABLES = {"documents", "embeddings"}
 _SPREAD_MAX_BYTES = 256 * 1024 * 1024  # ~2 default 128M splits
-_SPREAD_SIZE_CACHE: dict[str, int] = {}
 
 
 def _input_bytes(path: str) -> int:
     """Total bytes under a LOCAL parquet path (file or directory); -1
     when the path isn't on the local filesystem (object stores arrive
     pre-split, so the spread gate treats unknown as 'big')."""
-    sz = _SPREAD_SIZE_CACHE.get(path)
-    if sz is None:
-        import os
+    def build() -> int:
         p = path.removeprefix("file:")
         try:
             if os.path.isdir(p):
-                sz = sum(
+                return sum(
                     os.path.getsize(os.path.join(root, fn))
                     for root, _, files in os.walk(p) for fn in files)
-            else:
-                sz = os.path.getsize(p)
+            return os.path.getsize(p)
         except OSError:
-            sz = -1
-        _SPREAD_SIZE_CACHE[path] = sz
-    return sz
+            return -1
 
-
-_TABLE_PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+    return _memo("input_bytes", path, build)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Base-table DataFrame for ``name`` under ``sf_dir``.
 
-    The PLAN OBJECT is memoized per (session, sf_dir, table) — r14,
+    The PLAN OBJECT is memoized per (sf_dir, session, table) — r14,
     guide §5: ``spark.read.parquet`` costs 70–110 ms of driver-blocked
     schema/footer work per call, and the bench builds ~400 table
     references per pass. A DataFrame is an immutable logical plan, not
@@ -189,9 +219,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``read.parquet`` calls had, keeping self-join entries analyzable.
     """
     _prep(spark)
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _TABLE_PLAN_CACHE.get(key)
-    if df is None:
+
+    def build() -> DataFrame:
         path = f"{sf_dir}/{name}.parquet"
         df = spark.read.parquet(path)
         if name == "events":
@@ -204,14 +233,14 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             nbytes = _input_bytes(path)
             if 0 <= nbytes <= _SPREAD_MAX_BYTES:
                 df = df.repartition(spark.sparkContext.defaultParallelism)
-        _TABLE_PLAN_CACHE[key] = df
+        return df
+
+    df = _memo("table_plan",
+               (sf_dir, spark.sparkContext.applicationId, name), build)
     # one parsed projection (not per-column alias calls): each
     # `c AS c` mints a fresh expression id, in a single py4j call
     return df.selectExpr(*[
         f"`{c}` AS `{c}`" for c in df.columns])
-
-
-_QVEC_CACHE: dict[str, tuple] = {}
 
 
 def _query_vec(spark: SparkSession, sf_dir: str) -> list:
@@ -225,12 +254,9 @@ def _query_vec(spark: SparkSession, sf_dir: str) -> list:
     Returns a fresh list per call (r14, ADVICE): the memo itself is a
     tuple, so no caller's in-place mutation can corrupt the probe
     vector for later queries."""
-    v = _QVEC_CACHE.get(sf_dir)
-    if v is None:
-        v = tuple(_t(spark, sf_dir, "embeddings")
-                  .where("vec_id = 0").collect()[0]["embedding"])
-        _QVEC_CACHE[sf_dir] = v
-    return list(v)
+    return list(_memo("query_vec", sf_dir, lambda: tuple(
+        _t(spark, sf_dir, "embeddings")
+        .where("vec_id = 0").collect()[0]["embedding"])))
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -247,24 +273,19 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     the streaming replays), and every ORACLE still recomputes it from
     lineitem, so the materialization is correctness-audited on every
     gate run."""
-    import tempfile
-
-    path = _EDGE_CACHE.get(sf_dir)
-    if path is None:
+    def build() -> DataFrame:
         li = _t(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey")
         a = li.withColumnRenamed("l_partkey", "p1")
         b = li.withColumnRenamed("l_partkey", "p2")
-        edges = (
+        return (
             a.join(b, "l_orderkey")
             .where(F.col("p1") < F.col("p2"))
             .select(F.col("p1").alias("src"), F.col("p2").alias("dst"))
             .distinct()
         )
-        path = tempfile.mkdtemp(prefix="copurchase_edges_") + "/edges"
-        edges.write.mode("overwrite").parquet(path)
-        _EDGE_CACHE[sf_dir] = path
-    return spark.read.parquet(path)
+
+    return _materialize_once(spark, "copurchase_edges", sf_dir, build)
 
 
 def _lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -273,20 +294,11 @@ def _lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     emits it directly and `graph_modularity` scores it. Same
     audited-cache contract as the edge/triangle relations: both
     oracles re-derive the assignment independently."""
-    import tempfile
+    from bigdata_tag_system_spark.operators.graph import label_propagation
 
-    path = _LPA_CACHE.get(sf_dir)
-    if path is None:
-        from bigdata_tag_system_spark.operators.graph import (
-            label_propagation,
-        )
-
-        labels = label_propagation(
-            _copurchase_edges(spark, sf_dir), rounds=3)
-        path = tempfile.mkdtemp(prefix="lpa_labels_") + "/labels"
-        labels.write.mode("overwrite").parquet(path)
-        _LPA_CACHE[sf_dir] = path
-    return spark.read.parquet(path)
+    return _materialize_once(spark, "lpa_labels", sf_dir, lambda:
+                             label_propagation(
+                                 _copurchase_edges(spark, sf_dir), rounds=3))
 
 
 def _label_noise_pervec(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -300,29 +312,16 @@ def _label_noise_pervec(spark: SparkSession, sf_dir: str) -> DataFrame:
     it soundly. Same audited-cache contract as `_copurchase_edges`:
     BOTH oracles re-derive the exact neighbor census independently in
     SQL, so the memo cannot hide drift."""
-    import tempfile
+    from bigdata_tag_system_spark.operators.embeddings import (
+        label_noise_per_vec,
+    )
 
-    path = _LNOISE_CACHE.get(sf_dir)
-    if path is None:
-        from bigdata_tag_system_spark.operators.embeddings import (
-            label_noise_per_vec,
-        )
-
-        cents = _fitted_centroids(spark, sf_dir)
-        pv = label_noise_per_vec(
-            _t(spark, sf_dir, "embeddings"), cents, k=5)
-        path = tempfile.mkdtemp(prefix="lnoise_pervec_") + "/pervec"
-        pv.write.mode("overwrite").parquet(path)
-        _LNOISE_CACHE[sf_dir] = path
-    return spark.read.parquet(path)
+    return _materialize_once(spark, "lnoise_pervec", sf_dir, lambda:
+                             label_noise_per_vec(
+                                 _t(spark, sf_dir, "embeddings"),
+                                 _fitted_centroids(spark, sf_dir), k=5))
 
 
-_TRI_CACHE: dict[str, str] = {}
-_ORC_CACHE: dict[str, str] = {}
-# one embedded-Derby system directory per process (Derby allows a single
-# JVM per database; each process gets its own tmpdir, so pytest and the
-# driver never contend)
-_DERBY_CACHE: dict[str, str] = {}
 _DERBY_PROPS = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
 
 
@@ -331,21 +330,14 @@ def _derby_url(spark: SparkSession) -> str:
     in pyspark/jars (derby-10.16) — zero network, real JDBC: the same
     `spark.read.jdbc` / `df.write.jdbc` code paths a cluster points at
     MySQL/Postgres (reference `src/readers/rule_reader.py:63-67`,
-    `src/writers/mysql_writer.py:309-314`)."""
-    d = _DERBY_CACHE.get("dir")
-    if d is None:
-        import tempfile
-
+    `src/writers/mysql_writer.py:309-314`). One Derby system directory
+    per process (Derby allows a single JVM per database; each process
+    gets its own, so concurrent processes never contend)."""
+    def fill(d: str) -> None:
         spark._jvm.java.lang.System.setProperty(
-            "derby.stream.error.file", "/tmp/derby_catalog.log")
-        d = tempfile.mkdtemp(prefix="derby_cat_")
-        _DERBY_CACHE["dir"] = d
-    return f"jdbc:derby:{d}/db;create=true"
-_TEXT_CACHE: dict[str, str] = {}
-_BKEY_CACHE: dict[str, str] = {}
-_PPAIR_CACHE: dict[str, str] = {}
-_MHPAIR_CACHE: dict[str, str] = {}
-_NGPAIR_CACHE: dict[tuple[str, float], str] = {}
+            "derby.stream.error.file", f"{d}/derby.log")
+
+    return f"jdbc:derby:{_memo_dir('derby_cat', None, fill)}/db;create=true"
 
 
 def _ngram_pairs_05(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -368,19 +360,12 @@ def _ngram_pairs_03(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ngram_pairs_at(spark: SparkSession, sf_dir: str,
                     threshold: float) -> DataFrame:
-    import tempfile
+    from bigdata_tag_system_spark.operators import dedup as _D
 
-    key = (sf_dir, threshold)
-    path = _NGPAIR_CACHE.get(key)
-    if path is None:
-        from bigdata_tag_system_spark.operators import dedup as _D
-
-        pairs = _D.ngram_jaccard_pairs(
-            _t(spark, sf_dir, "documents"), threshold=threshold)
-        path = tempfile.mkdtemp(prefix="ngram_pairs_") + "/pairs"
-        pairs.write.mode("overwrite").parquet(path)
-        _NGPAIR_CACHE[key] = path
-    return spark.read.parquet(path)
+    return _materialize_once(spark, "ngram_pairs", (sf_dir, threshold), lambda:
+                             _D.ngram_jaccard_pairs(
+                                 _t(spark, sf_dir, "documents"),
+                                 threshold=threshold))
 
 
 def _minhash_pairs_05(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -390,18 +375,12 @@ def _minhash_pairs_05(spark: SparkSession, sf_dir: str) -> DataFrame:
     IDENTICAL relation and differ only in their keep strategy. Same
     audited-cache contract as the other corpus-pure materializations
     (their oracles derive the pair set independently)."""
-    import tempfile
+    from bigdata_tag_system_spark.operators import dedup as _D
 
-    path = _MHPAIR_CACHE.get(sf_dir)
-    if path is None:
-        from bigdata_tag_system_spark.operators import dedup as _D
-
-        pairs = _D.minhash_dedup(
-            _t(spark, sf_dir, "documents"), threshold=0.5)
-        path = tempfile.mkdtemp(prefix="mh_pairs_") + "/pairs"
-        pairs.write.mode("overwrite").parquet(path)
-        _MHPAIR_CACHE[sf_dir] = path
-    return spark.read.parquet(path)
+    return _materialize_once(spark, "mh_pairs", sf_dir, lambda:
+                             _D.minhash_dedup(
+                                 _t(spark, sf_dir, "documents"),
+                                 threshold=0.5))
 
 
 def _portable_bkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -414,21 +393,14 @@ def _portable_bkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract as `_copurchase_edges` / `_copurchase_triangles`: a pure
     function of the corpus, and every ORACLE recomputes the banding
     from raw text, so each gate run checks the cache."""
-    import tempfile
+    from bigdata_tag_system_spark.operators.dedup import (
+        _portable_band_keys, _shingle_df,
+    )
 
-    path = _BKEY_CACHE.get(sf_dir)
-    if path is None:
-        from bigdata_tag_system_spark.operators.dedup import (
-            _portable_band_keys, _shingle_df,
-        )
-
-        sh = _shingle_df(_t(spark, sf_dir, "documents"),
-                         "text", "doc_id", 3)
-        bk = _portable_band_keys(sh, "doc_id", 8, 2)
-        path = tempfile.mkdtemp(prefix="portable_bkeys_") + "/bkeys"
-        bk.write.mode("overwrite").parquet(path)
-        _BKEY_CACHE[sf_dir] = path
-    return spark.read.parquet(path)
+    return _materialize_once(spark, "portable_bkeys", sf_dir, lambda:
+                             _portable_band_keys(_shingle_df(
+                                 _t(spark, sf_dir, "documents"),
+                                 "text", "doc_id", 3), "doc_id", 8, 2))
 
 
 def _portable_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -436,19 +408,13 @@ def _portable_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents, materialized once per process per sf_dir on top of the
     cached band keys; read by `dedup_minhash_portable` and
     `dedup_split_leakage`."""
-    import tempfile
+    from bigdata_tag_system_spark.operators import dedup as _D
 
-    path = _PPAIR_CACHE.get(sf_dir)
-    if path is None:
-        from bigdata_tag_system_spark.operators import dedup as _D
-
-        pairs = _D.minhash_portable_pairs(
-            _t(spark, sf_dir, "documents"), threshold=0.5,
-            band_keys=_portable_bkeys(spark, sf_dir))
-        path = tempfile.mkdtemp(prefix="portable_pairs_") + "/pairs"
-        pairs.write.mode("overwrite").parquet(path)
-        _PPAIR_CACHE[sf_dir] = path
-    return spark.read.parquet(path)
+    return _materialize_once(spark, "portable_pairs", sf_dir, lambda:
+                             _D.minhash_portable_pairs(
+                                 _t(spark, sf_dir, "documents"),
+                                 threshold=0.5,
+                                 band_keys=_portable_bkeys(spark, sf_dir)))
 
 
 def _copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -461,19 +427,11 @@ def _copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     is this census twice). Same contract as `_copurchase_edges`: a pure
     function of the corpus, both ORACLES still recompute triangles from
     lineitem from scratch, so every gate run audits the cache."""
-    import tempfile
+    from bigdata_tag_system_spark.operators.graph import enumerate_triangles
 
-    path = _TRI_CACHE.get(sf_dir)
-    if path is None:
-        from bigdata_tag_system_spark.operators.graph import (
-            enumerate_triangles,
-        )
-
-        tri = enumerate_triangles(_copurchase_edges(spark, sf_dir))
-        path = tempfile.mkdtemp(prefix="copurchase_tri_") + "/triangles"
-        tri.write.mode("overwrite").parquet(path)
-        _TRI_CACHE[sf_dir] = path
-    return spark.read.parquet(path)
+    return _materialize_once(spark, "copurchase_tri", sf_dir, lambda:
+                             enumerate_triangles(
+                                 _copurchase_edges(spark, sf_dir)))
 
 
 def _cond(field: str, op: str, value=None, type_=None) -> dict:
@@ -503,15 +461,14 @@ def _count_rule(table: str, rule: dict, as_of: str | None = None):
 def _fitted_centroids(spark: SparkSession, sf_dir: str) -> list:
     """Deterministic k-means centroids over the embeddings table, fitted
     once per sf_dir (shared by the IVF store and the bucketed kNN join)."""
-    cents = _CENTROID_CACHE.get(sf_dir)
-    if cents is None:
+    def build() -> list:
         from bigdata_tag_system_spark.operators import similarity as S
 
         emb = _t(spark, sf_dir, "embeddings")
         dim = len(emb.select("embedding").first()["embedding"])
-        cents = S.fit_centroids(emb, dim=dim, num_buckets=8)
-        _CENTROID_CACHE[sf_dir] = cents
-    return cents
+        return S.fit_centroids(emb, dim=dim, num_buckets=8)
+
+    return _memo("centroids", sf_dir, build)
 
 
 def _tokens_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -984,15 +941,11 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # embeddings keyed vec_id → expose as doc_id via a staged view;
         # the staged copy is a pure function of the sf_dir, so build it
         # once per process (bench iterations / correctness re-runs reuse
-        # it) instead of leaking a mkdtemp per call
-        import tempfile
-
-        emb_path = _EMB_KEYED_CACHE.get(sf_dir)
-        if emb_path is None:
-            emb_path = tempfile.mkdtemp(prefix="emb_keyed_") + "/emb"
-            _t(spark, sf_dir, "embeddings").withColumnRenamed(
-                "vec_id", "doc_id").write.mode("overwrite").parquet(emb_path)
-            _EMB_KEYED_CACHE[sf_dir] = emb_path
+        # it) instead of leaking a directory per call
+        emb_path = _memo_dir("emb_keyed", sf_dir, lambda d: _t(
+            spark, sf_dir, "embeddings").withColumnRenamed(
+            "vec_id", "doc_id").write.mode("overwrite").parquet(
+            f"{d}/emb")) + "/emb"
         cat.register("embeddings_keyed", emb_path)
 
         rules = load_rules([{
@@ -1028,12 +981,10 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # parquet_merge_upsert semantics driven in-plan: keys = new ∪ old,
         # last-writer-wins on scalars, set-union on tag arrays — the
         # Delta MERGE INTO analogue the S8 JDBC sink also implements
-        import tempfile
-
         from bigdata_tag_system_spark.sources.writers import parquet_merge_upsert
 
         c = _t(spark, sf_dir, "customer")
-        store = tempfile.mkdtemp(prefix="upsert_store_") + "/user_tags"
+        store = _scratch_dir("upsert_store_") + "/user_tags"
         old = c.where("c_custkey % 3 = 0").select(
             F.col("c_custkey").alias("user_id"), F.lit("old").alias("val"),
             F.array(F.lit(99)).alias("tags"))
@@ -1065,8 +1016,6 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # plan-asserted in tests/test_sources_scenarios.py); bucketing
         # is physical only, so the plain full-outer merge SQL is the
         # oracle. Store built once per sf_dir per process.
-        import tempfile
-
         from bigdata_tag_system_spark.sources.bucketed_store import (
             read_bucketed_store,
             write_bucketed_store,
@@ -1074,14 +1023,15 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         _prep(spark)
         c = _t(spark, sf_dir, "customer")
-        path = _BUCKET_STORE_CACHE.get(sf_dir)
-        if path is None:
-            path = tempfile.mkdtemp(prefix="bstore_") + "/store"
+
+        def fill(d):
             old = c.where("c_custkey % 3 = 0").select(
                 F.col("c_custkey").alias("user_id"),
                 F.array(F.lit(99)).alias("tag_ids"))
-            write_bucketed_store(spark, old, path, key="user_id", num_buckets=8)
-            _BUCKET_STORE_CACHE[sf_dir] = path
+            write_bucketed_store(
+                spark, old, f"{d}/store", key="user_id", num_buckets=8)
+
+        path = _memo_dir("bstore", sf_dir, fill) + "/store"
         store = read_bucketed_store(spark, path, key="user_id", num_buckets=8)
         new = c.where("c_mktsegment = 'BUILDING'").select(
             F.col("c_custkey").alias("user_id"),
@@ -1213,11 +1163,9 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # materialized once per process under the confs (they are
         # session-scoped and plans optimize lazily, so the entry must
         # not leak them past its own action).
-        import tempfile
-
         _prep(spark)
-        out_dir = _BLOOM_JOIN_CACHE.get(sf_dir)
-        if out_dir is None:
+
+        def fill(d):
             saved = {}
             confs = {
                 "spark.sql.autoBroadcastJoinThreshold": "-1",
@@ -1240,16 +1188,15 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                          .alias("qty_sum"),
                          F.round(F.sum("l_extendedprice"), 2)
                          .alias("price_sum")))
-                out_dir = tempfile.mkdtemp(
-                    prefix="bloom_join_") + "/res"
-                res.write.mode("overwrite").parquet(out_dir)
+                res.write.mode("overwrite").parquet(f"{d}/res")
             finally:
                 for k, v in saved.items():
                     if v is None:
                         spark.conf.unset(k)
                     else:
                         spark.conf.set(k, v)
-            _BLOOM_JOIN_CACHE[sf_dir] = out_dir
+
+        out_dir = _memo_dir("bloom_join", sf_dir, fill) + "/res"
         return spark.read.parquet(out_dir).orderBy("l_returnflag")
 
     q["join_runtime_bloom"] = join_runtime_bloom
@@ -2248,14 +2195,9 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # sf_dir, so repeated invocations (bench iterations, correctness
         # re-runs) reuse one build instead of rewriting a corpus-sized
         # sketch — and leaking a temp directory — per call.
-        import tempfile
-
-        idx = _MH_INDEX_CACHE.get(sf_dir)
         d = _t(spark, sf_dir, "documents")
-        if idx is None:
-            idx = tempfile.mkdtemp(prefix="mh_idx_") + "/idx"
-            D.write_minhash_index(d, idx, num_hashes=32, bands=16)
-            _MH_INDEX_CACHE[sf_dir] = idx
+        idx = _memo_dir("mh_idx", sf_dir, lambda tmp: D.write_minhash_index(
+            d, f"{tmp}/idx", num_hashes=32, bands=16)) + "/idx"
         new = d.where("doc_id < 100 AND text IS NOT NULL") \
             .withColumn("doc_id", F.col("doc_id") + F.lit(1_000_000))
         out = D.minhash_dedup_incremental(spark, new, idx, threshold=0.5)
@@ -2315,15 +2257,9 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # is provably lossless and the brute-force SQL oracle applies;
         # recall at nprobe < buckets is covered in pytest. The store is a
         # pure function of the corpus — built once per sf_dir per process.
-        import tempfile
-
         emb = _t(spark, sf_dir, "embeddings")
-        path = _IVF_INDEX_CACHE.get(sf_dir)
-        if path is None:
-            cents = _fitted_centroids(spark, sf_dir)
-            path = tempfile.mkdtemp(prefix="ivf_idx_") + "/idx"
-            S.write_ivf_index_fitted(emb, path, cents)
-            _IVF_INDEX_CACHE[sf_dir] = path
+        path = _memo_dir("ivf_idx", sf_dir, lambda d: S.write_ivf_index_fitted(
+            emb, f"{d}/idx", _fitted_centroids(spark, sf_dir))) + "/idx"
         qv = _query_vec(spark, sf_dir)
         out = S.ivf_topk_indexed_fitted(spark, path, qv, k=10, nprobe=8)
         return out.select(
@@ -2402,8 +2338,6 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # streaming path shares the batch engine's semantics exactly.
         # The replay is a pure function of the sf_dir: run once per
         # process, re-aggregate from the sink afterwards.
-        import tempfile
-
         from bigdata_tag_system_spark.streaming.rule_stream import (
             streaming_tag_assignments,
         )
@@ -2412,16 +2346,14 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         defs = spark.createDataFrame(
             [(1, "high_value"), (2, "purchaser"), (3, "engaged")],
             "tag_id int, tag_name string")
-        out_dir = _STREAM_PARITY_CACHE.get(sf_dir)
-        if out_dir is None:
-            import os
+
+        def fill(tmp):
             import shutil
 
             schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
             # the file stream source requires a DIRECTORY (its basePath);
             # the test table is a single parquet file — stage a hardlink
             # (copy fallback) into a temp dir to stream from
-            tmp = tempfile.mkdtemp(prefix="stream_parity_")
             src_dir = tmp + "/src"
             os.makedirs(src_dir)
             try:
@@ -2446,9 +2378,9 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 .start()
             )
             query.awaitTermination()
-            _STREAM_PARITY_CACHE[sf_dir] = out
-            out_dir = out
-        replayed = spark.read.parquet(out_dir)
+
+        replayed = spark.read.parquet(
+            _memo_dir("stream_parity", sf_dir, fill) + "/out")
         return (
             replayed.groupBy("tag_id", "tag_name")
             .agg(F.count(F.lit(1)).alias("n_events"))
@@ -2466,19 +2398,16 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the read side keeps the LAST emission per key (update mode
         # re-emits a key whenever late data lands in its window), which
         # must equal the batch GROUP BY exactly.
-        import os
         import shutil
-        import tempfile
 
         from bigdata_tag_system_spark.streaming.rule_stream import (
             windowed_event_aggregates,
         )
 
         _prep(spark)
-        out_dir = _STREAM_WINDOW_CACHE.get(sf_dir)
-        if out_dir is None:
+
+        def fill(tmp):
             schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-            tmp = tempfile.mkdtemp(prefix="stream_win_")
             src_dir = tmp + "/src"
             os.makedirs(src_dir)
             try:
@@ -2502,9 +2431,9 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 .start()
             )
             query.awaitTermination()
-            _STREAM_WINDOW_CACHE[sf_dir] = out
-            out_dir = out
-        replayed = spark.read.parquet(out_dir)
+
+        replayed = spark.read.parquet(
+            _memo_dir("stream_win", sf_dir, fill) + "/out")
         final = replayed.groupBy("window_start", "user_id").agg(
             F.max_by(F.struct("event_count", "value_sum"), "_bid").alias("s"))
         return final.select(
@@ -3225,19 +3154,16 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # build the sessionize replay ONCE per process per sf_dir and
         # return (out_dir, ckpt_dir) — shared by the emission-parity
         # entry and the r11 state-store readback entry
-        import os
         import shutil
-        import tempfile
 
         from bigdata_tag_system_spark.streaming.stateful import (
             sessionize_stream,
         )
 
         _prep(spark)
-        cached = _STREAM_SESSION_CACHE.get(sf_dir)
-        if cached is None:
+
+        def fill(tmp):
             schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-            tmp = tempfile.mkdtemp(prefix="stream_sess_")
             src_dir = tmp + "/src"
             os.makedirs(src_dir)
 
@@ -3270,9 +3196,9 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 .start()
             )
             query.awaitTermination()
-            _STREAM_SESSION_CACHE[sf_dir] = (out, ckpt)
-            cached = (out, ckpt)
-        return cached
+
+        tmp = _memo_dir("stream_sess", sf_dir, fill)
+        return tmp + "/out", tmp + "/ckpt"
 
     def stream_sessionize_parity(spark, sf_dir):
         # the applyInPandasWithState sessionizer replayed availableNow
@@ -3335,19 +3261,15 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # INCLUSIVE, pinned by a planted pytest; end = last ts + gap)
         # restricted to sessions the final watermark finalized; value
         # in integer cents.
-        import os
-        import tempfile
-
         from bigdata_tag_system_spark.streaming.rule_stream import (
             session_window_aggregates,
         )
 
         _prep(spark)
-        out_dir = _STREAM_SESSION_NATIVE_CACHE.get(sf_dir)
-        if out_dir is None:
+
+        def fill(tmp):
             ev = _t(spark, sf_dir, "events")
             schema = ev.schema
-            tmp = tempfile.mkdtemp(prefix="stream_sessnat_")
             src_dir = tmp + "/src"
             os.makedirs(src_dir)
             cuts = ["2024-01-11", "2024-01-21"]
@@ -3386,9 +3308,9 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 .start()
             )
             query.awaitTermination()
-            _STREAM_SESSION_NATIVE_CACHE[sf_dir] = out
-            out_dir = out
-        replayed = spark.read.parquet(out_dir)
+
+        replayed = spark.read.parquet(
+            _memo_dir("stream_sessnat", sf_dir, fill) + "/out")
         return replayed.select(
             "user_id", "session_start_ms", "session_end_ms",
             "event_count", "value_cents",
@@ -3406,19 +3328,15 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (events_ewma_value's oracle). Final value per user = the
         # emission with the highest events-seen count (update mode
         # emits one row per user per batch).
-        import os
-        import tempfile
-
         from bigdata_tag_system_spark.streaming.stateful import (
             ewma_stream,
         )
 
         _prep(spark)
-        out_dir = _STREAM_EWMA_CACHE.get(sf_dir)
-        if out_dir is None:
+
+        def fill(tmp):
             ev = spark.read.parquet(f"{sf_dir}/events.parquet")
             schema = ev.schema
-            tmp = tempfile.mkdtemp(prefix="stream_ewma_")
             src_dir = tmp + "/src"
             os.makedirs(src_dir)
             # three time-ranged chunks: the recursion is
@@ -3459,9 +3377,9 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 .start()
             )
             query.awaitTermination()
-            _STREAM_EWMA_CACHE[sf_dir] = out
-            out_dir = out
-        replayed = spark.read.parquet(out_dir)
+
+        replayed = spark.read.parquet(
+            _memo_dir("stream_ewma", sf_dir, fill) + "/out")
         return (
             replayed.groupBy("user_id")
             .agg(F.max_by(
@@ -3940,26 +3858,23 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             read_jsonl_corpus,
         )
 
-        path = _JSONL_CACHE.get(sf_dir)
-        if path is None:
-            import tempfile
-
+        def fill(tmp):
             import duckdb as _duck
 
-            tmp = tempfile.mkdtemp(prefix="jsonl_corpus_")
-            path = os.path.join(tmp, "corpus.jsonl")
             rows = _duck.sql(
                 f"SELECT doc_id, lang FROM "
                 f"read_parquet('{sf_dir}/documents.parquet') "
                 f"ORDER BY doc_id").fetchall()
-            with open(path, "w") as f:
+            with open(os.path.join(tmp, "corpus.jsonl"), "w") as f:
                 for doc_id, lang in rows:
                     f.write(_json.dumps(
                         {"doc_id": doc_id, "lang": lang}) + "\n")
                 f.write("{not json at all\n")
                 f.write("[5, 6]\n")
                 f.write("garbage line\n")
-            _JSONL_CACHE[sf_dir] = path
+
+        path = os.path.join(
+            _memo_dir("jsonl_corpus", sf_dir, fill), "corpus.jsonl")
         df = read_jsonl_corpus(
             spark, path, schema="doc_id bigint, lang string")
         return df.agg(
@@ -3980,17 +3895,14 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             write_partitioned_dataset,
         )
 
-        out_dir = _PARTITIONED_CACHE.get(sf_dir)
-        if out_dir is None:
-            import tempfile
-
-            out_dir = tempfile.mkdtemp(prefix="events_by_day_") + "/ds"
+        def fill(d):
             ev = _t(spark, sf_dir, "events").withColumn(
                 "event_date", F.to_date("ts"))
             write_partitioned_dataset(
-                ev, out_dir, ["event_date"], max_records_per_file=500_000)
-            _PARTITIONED_CACHE[sf_dir] = out_dir
-        return spark.read.parquet(out_dir)
+                ev, f"{d}/ds", ["event_date"], max_records_per_file=500_000)
+
+        return spark.read.parquet(
+            _memo_dir("events_by_day", sf_dir, fill) + "/ds")
 
     def scan_partition_pruned(spark, sf_dir):
         # one day read back from the staged hive-partitioned dataset —
@@ -4880,14 +4792,12 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (overwriting acctbal to a derived value). Final state is a
         # pure function of the inputs — the oracle recomputes it with
         # set algebra; store staged fresh per call into a temp dir
-        import tempfile
-
         from bigdata_tag_system_spark.sources.writers import (
             apply_changeset, write_parquet,
         )
 
         c = _t(spark, sf_dir, "customer")
-        store_path = tempfile.mkdtemp(prefix="cdc_store_") + "/store"
+        store_path = _scratch_dir("cdc_store_") + "/store"
         base = c.where("c_custkey % 3 = 0").select(
             F.col("c_custkey").alias("user_id"),
             F.col("c_acctbal").alias("bal"))
@@ -4915,17 +4825,15 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # a pure function of the sf_dir — run once per process
         import os
         import shutil
-        import tempfile
 
         from bigdata_tag_system_spark.streaming.rule_stream import (
             stream_stream_attribution_join,
         )
 
         _prep(spark)
-        out_dir = _STREAM_JOIN_CACHE.get(sf_dir)
-        if out_dir is None:
+
+        def fill(tmp):
             schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-            tmp = tempfile.mkdtemp(prefix="stream_join_")
             src_dir = tmp + "/src"
             os.makedirs(src_dir)
             try:
@@ -4950,8 +4858,8 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 .start()
             )
             query.awaitTermination()
-            _STREAM_JOIN_CACHE[sf_dir] = out
-            out_dir = out
+
+        out_dir = _memo_dir("stream_join", sf_dir, fill) + "/out"
         replayed = spark.read.parquet(out_dir)
         return replayed.select(
             "l_event_id", "r_event_id",
@@ -5032,17 +4940,15 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # re-derives exactly that emission set
         import os
         import shutil
-        import tempfile
 
         from bigdata_tag_system_spark.streaming.rule_stream import (
             stream_stream_attribution_join,
         )
 
         _prep(spark)
-        out_dir = _STREAM_OUTER_CACHE.get(sf_dir)
-        if out_dir is None:
+
+        def fill(tmp):
             schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-            tmp = tempfile.mkdtemp(prefix="stream_louter_")
             src_dir = tmp + "/src"
             os.makedirs(src_dir)
             try:
@@ -5068,8 +4974,8 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 .start()
             )
             query.awaitTermination()
-            _STREAM_OUTER_CACHE[sf_dir] = out
-            out_dir = out
+
+        out_dir = _memo_dir("stream_louter", sf_dir, fill) + "/out"
         replayed = spark.read.parquet(out_dir)
         return replayed.select(
             "l_event_id", "r_event_id",
@@ -5086,15 +4992,12 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # per distinct non-null digest (the dedup guarantee itself) and
         # every null-text row passes through (uuid per-row keys). The
         # oracle re-derives that invariant set-theoretically.
-        import tempfile
-
         from bigdata_tag_system_spark.functions.text import normalize_text
         from bigdata_tag_system_spark.streaming.rule_stream import (
             streaming_exact_dedup,
         )
 
-        out_dir = _STREAM_DEDUP_CACHE.get(sf_dir)
-        if out_dir is None:
+        def fill(tmp):
             docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
             dup = (
                 docs.where("doc_id < 100 AND text IS NOT NULL")
@@ -5103,7 +5006,6 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             staged = docs.unionByName(dup).select(
                 "doc_id", "text",
                 F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("ts"))
-            tmp = tempfile.mkdtemp(prefix="stream_dedup_")
             src_dir = tmp + "/src"
             staged.write.parquet(src_dir)
             stream = spark.readStream.schema(staged.schema).parquet(src_dir)
@@ -5118,8 +5020,8 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 .start()
             )
             query.awaitTermination()
-            _STREAM_DEDUP_CACHE[sf_dir] = out
-            out_dir = out
+
+        out_dir = _memo_dir("stream_dedup", sf_dir, fill) + "/out"
         replayed = spark.read.parquet(out_dir)
         return (
             replayed.select(F.md5(normalize_text("text")).alias("digest"))
@@ -5340,13 +5242,11 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # by the rewrite breaks the hash. The layout claims themselves
         # (fewer files, disjoint key ranges) are asserted in-query and
         # in pytest.
-        import tempfile
-
         from bigdata_tag_system_spark.sources.writers import (
             compact_parquet,
         )
 
-        path = tempfile.mkdtemp(prefix="compact_store_") + "/orders"
+        path = _scratch_dir("compact_store_") + "/orders"
         orders = _t(spark, sf_dir, "orders")
         orders.repartition(64).write.parquet(path)
         n_files = compact_parquet(
@@ -5472,18 +5372,16 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # EXACT (err=0) and the oracle is a plain GROUP BY count —
         # the bounded-memory path is exercised separately in pytest
         import os
-        import tempfile
 
         from bigdata_tag_system_spark.streaming.stateful import (
             space_saving_stream,
         )
 
         _prep(spark)
-        out_dir = _STREAM_TOPK_CACHE.get(sf_dir)
-        if out_dir is None:
+
+        def fill(tmp):
             ev = spark.read.parquet(f"{sf_dir}/events.parquet")
             schema = ev.schema
-            tmp = tempfile.mkdtemp(prefix="stream_topk_")
             src_dir = tmp + "/src"
             os.makedirs(src_dir)
             cuts = ["2024-01-11", "2024-01-21"]
@@ -5523,8 +5421,8 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 .start()
             )
             query.awaitTermination()
-            _STREAM_TOPK_CACHE[sf_dir] = out
-            out_dir = out
+
+        out_dir = _memo_dir("stream_topk", sf_dir, fill) + "/out"
         from pyspark.sql import Window
 
         replayed = spark.read.parquet(out_dir)
@@ -5698,16 +5596,12 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # upserted. The oracle computes the final state closed-form
         # from the op timeline — every CASE branch is a distinct
         # ordering proof
-        import os
-        import tempfile
-
         from bigdata_tag_system_spark.sources.writers import write_parquet
         from bigdata_tag_system_spark.streaming.rule_stream import (
             run_cdc_apply_stream,
         )
 
-        store = _STREAM_CDC_CACHE.get(sf_dir)
-        if store is None:
+        def fill(tmp):
             c = _t(spark, sf_dir, "customer").select(
                 F.col("c_custkey").alias("k"), "c_acctbal")
 
@@ -5729,7 +5623,6 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 ups("k % 10 = 5", F.round(F.col("c_acctbal") + 1000, 2))
                 .unionByName(dels("k % 6 = 2")),
             ]
-            tmp = tempfile.mkdtemp(prefix="stream_cdc_")
             src = tmp + "/src"
             os.makedirs(src)
             for i, b in enumerate(batches):
@@ -5758,7 +5651,8 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 stream, store, key_cols=["user_id"],
                 checkpoint_dir=tmp + "/ckpt")
             query.awaitTermination()
-            _STREAM_CDC_CACHE[sf_dir] = store
+
+        store = _memo_dir("stream_cdc", sf_dir, fill) + "/store"
         return spark.read.parquet(store).select("user_id", "bal") \
             .orderBy("user_id")
 
@@ -5803,24 +5697,19 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # only the malformed FIELD nulls out (row 2's id still parses),
         # the raw line lands in _corrupt_record — row counts never
         # change between engines or reruns
-        import os
-
         from bigdata_tag_system_spark.sources.readers import read_csv_corpus
 
-        path = _CSV_CACHE.get(sf_dir)
-        if path is None:
-            import tempfile
-
-            tmp = tempfile.mkdtemp(prefix="csv_corpus_") + "/data"
+        def fill(d):
             docs = _t(spark, sf_dir, "documents").select(
                 "doc_id", "lang", "source", "n_chars")
-            docs.write.mode("overwrite").option("header", "false").csv(tmp)
-            with open(tmp + "/zz_bad.csv", "w") as f:
+            docs.write.mode("overwrite").option("header", "false").csv(
+                d + "/data")
+            with open(d + "/data/zz_bad.csv", "w") as f:
                 f.write("badid,en,src1,7\n"
                         "123456,de,src2,badchars\n"
                         "tooshort,en\n")
-            _CSV_CACHE[sf_dir] = tmp
-            path = tmp
+
+        path = _memo_dir("csv_corpus", sf_dir, fill) + "/data"
         df = read_csv_corpus(
             spark, path,
             "doc_id bigint, lang string, source string, n_chars bigint")
@@ -5927,11 +5816,8 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             write_version,
         )
 
-        store = _VERSION_CACHE.get(sf_dir)
-        if store is None:
-            import tempfile
-
-            store = tempfile.mkdtemp(prefix="vstore_") + "/dim"
+        def fill(d):
+            store = d + "/dim"
             c = _t(spark, sf_dir, "customer").select(
                 F.col("c_custkey").alias("k"), "c_acctbal")
             v1 = c.where("k % 3 = 0").select(
@@ -5949,8 +5835,8 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 F.round(F.col("c_acctbal") + 100, 2).alias("bal"))
             v3 = v2.join(ups, "user_id", "left_anti").unionByName(ups)
             write_version(v3, store)
-            _VERSION_CACHE[sf_dir] = store
-        return store
+
+        return _memo_dir("vstore", sf_dir, fill) + "/dim"
 
     def store_time_travel(spark, sf_dir):
         # snapshot-isolation store: three versions written (base →
@@ -6223,13 +6109,11 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # by the 64-bucket geometry, not by stream cardinality
         import os
         import shutil
-        import tempfile
 
         _prep(spark)
-        out_dir = _STREAM_HIST_CACHE.get(sf_dir)
-        if out_dir is None:
+
+        def fill(tmp):
             schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-            tmp = tempfile.mkdtemp(prefix="stream_hist_")
             src_dir = tmp + "/src"
             os.makedirs(src_dir)
             try:
@@ -6262,8 +6146,8 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 .start()
             )
             q_.awaitTermination()
-            _STREAM_HIST_CACHE[sf_dir] = out
-            out_dir = out
+
+        out_dir = _memo_dir("stream_hist", sf_dir, fill) + "/out"
         return spark.read.parquet(out_dir).select(
             "bucket", F.col("count").alias("cnt")).orderBy("bucket")
 
@@ -6417,11 +6301,8 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # columns (a,b) then (a,c) union under mergeSchema — absent
         # columns surface as nulls, nothing dropped, nothing invented.
         # The drift-tolerant ingest contract, closed-form oracle
-        import tempfile
-
-        path = _SCHEMA_MERGE_CACHE.get(sf_dir)
-        if path is None:
-            path = tempfile.mkdtemp(prefix="schema_merge_") + "/data"
+        def fill(d):
+            path = d + "/data"
             c = _t(spark, sf_dir, "customer")
             c.where("c_custkey % 2 = 0").select(
                 F.col("c_custkey").alias("k"),
@@ -6431,7 +6312,8 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 F.col("c_custkey").alias("k"),
                 F.col("c_mktsegment").alias("seg")) \
                 .write.mode("overwrite").parquet(path + "/batch=2")
-            _SCHEMA_MERGE_CACHE[sf_dir] = path
+
+        path = _memo_dir("schema_merge", sf_dir, fill) + "/data"
         df = spark.read.option("mergeSchema", "true").parquet(path)
         return df.agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -6852,17 +6734,15 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             zone_map_report,
         )
 
-        path = _ZONEMAP_CACHE.get(sf_dir)
-        if path is None:
-            import tempfile
-
-            path = tempfile.mkdtemp(prefix="zonemap_") + "/events"
+        def fill(d):
             ev = _t(spark, sf_dir, "events").select(
                 "event_id", "user_id", "value")
             (ev.withColumn("bucket", F.expr("user_id div 30"))
              .repartition("bucket")
-             .write.partitionBy("bucket").mode("overwrite").parquet(path))
-            _ZONEMAP_CACHE[sf_dir] = path
+             .write.partitionBy("bucket").mode("overwrite")
+             .parquet(d + "/events"))
+
+        path = _memo_dir("zonemap", sf_dir, fill) + "/events"
         return zone_map_report(spark, path, "user_id", lo=40, hi=79)
 
     q["layout_zone_skip"] = layout_zone_skip
@@ -7238,13 +7118,9 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # process, read back, aggregated — proves the columnar
         # round-trip (schema incl. ns-timestamps + doubles) and adds
         # the third file format beside parquet and CSV/JSONL
-        path = _ORC_CACHE.get(sf_dir)
-        if path is None:
-            import tempfile
-
-            path = tempfile.mkdtemp(prefix="orc_events_") + "/events"
-            _t(spark, sf_dir, "events").write.mode("overwrite").orc(path)
-            _ORC_CACHE[sf_dir] = path
+        path = _memo_dir("orc_events", sf_dir, lambda d: _t(
+            spark, sf_dir, "events").write.mode("overwrite").orc(
+            d + "/events")) + "/events"
         df = spark.read.orc(path)
         return (
             df.groupBy("event_type")
@@ -7531,22 +7407,19 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # signature ⇒ every band collides), pairs are strictly ordered,
         # and no bucket overflowed at the parity cap. The planted-pair
         # count is SQL-exact.
-        import tempfile
-
         from bigdata_tag_system_spark.streaming.lsh_stream import (
             streaming_minhash_candidates,
         )
 
         _prep(spark)
-        out_dir = _STREAM_LSH_CACHE.get(sf_dir)
-        if out_dir is None:
+
+        def fill(tmp):
             docs = _t(spark, sf_dir, "documents") \
                 .where("text IS NOT NULL").select("doc_id", "text")
             dup = docs.where("doc_id % 10 = 0").select(
                 (F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
             aug = docs.unionAll(dup).withColumn(
                 "ts", F.lit("2024-01-01 00:00:00").cast("timestamp"))
-            tmp = tempfile.mkdtemp(prefix="stream_lsh_")
             src = tmp + "/src"
             aug.write.mode("overwrite").parquet(src)
             stream = spark.readStream.schema(aug.schema).parquet(src)
@@ -7564,8 +7437,8 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 .start()
             )
             query.awaitTermination()
-            _STREAM_LSH_CACHE[sf_dir] = out
-            out_dir = out
+
+        out_dir = _memo_dir("stream_lsh", sf_dir, fill) + "/out"
         cands = spark.read.parquet(out_dir)
         pairs = cands.where(~F.col("overflow")) \
             .select("id_a", "id_b").distinct()
@@ -7668,17 +7541,14 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # CSV/JSONL, ORC): documents staged as one line per doc (the
         # corpus has no embedded newlines), read back with
         # spark.read.text, parsed by a split-once projection
-        path = _TEXT_CACHE.get(sf_dir)
-        if path is None:
-            import tempfile
-
-            path = tempfile.mkdtemp(prefix="text_docs_") + "/docs"
+        def fill(d):
             docs = _t(spark, sf_dir, "documents") \
                 .where("text IS NOT NULL")
             docs.select(F.concat_ws(
                 "\t", F.col("doc_id").cast("string"), F.col("text"))
-                .alias("value")).write.mode("overwrite").text(path)
-            _TEXT_CACHE[sf_dir] = path
+                .alias("value")).write.mode("overwrite").text(d + "/docs")
+
+        path = _memo_dir("text_docs", sf_dir, fill) + "/docs"
         lines = spark.read.text(path)
         parsed = lines.select(
             F.split("value", "\t", 2).alias("_p")
@@ -7879,15 +7749,11 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # equal the full-scan rollup (same oracle as store_incr_agg).
         # At-least-once replays are skipped via the batch-id sidecar
         # (transactional-sink caveat documented in streaming/incremental.py)
-        import tempfile
-
         from bigdata_tag_system_spark.streaming.incremental import (
             additive_store_sink,
         )
 
-        store = _STREAM_INCR_CACHE.get(sf_dir)
-        if store is None:
-            tmp = tempfile.mkdtemp(prefix="stream_incr_")
+        def fill(tmp):
             src = tmp + "/src"
             spark.read.parquet(f"{sf_dir}/events.parquet") \
                 .repartition(3).write.mode("overwrite").parquet(src)
@@ -7913,7 +7779,8 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 .option("checkpointLocation", tmp + "/ckpt")
                 .foreachBatch(sink).start())
             run.awaitTermination()
-            _STREAM_INCR_CACHE[sf_dir] = store
+
+        store = _memo_dir("stream_incr", sf_dir, fill) + "/store"
         return spark.read.parquet(store).select(
             "event_type", "n_events", "cents", "max_cents", "min_cents"
         ).orderBy("event_type")
@@ -8450,16 +8317,14 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # early-January hours would double and the hash would flip.
         import os
         import shutil
-        import tempfile
 
         from bigdata_tag_system_spark.streaming.rule_stream import (
             windowed_event_aggregates,
         )
 
         _prep(spark)
-        out_dir = _STREAM_LATE_CACHE.get(sf_dir)
-        if out_dir is None:
-            tmp = tempfile.mkdtemp(prefix="stream_late_")
+
+        def fill(tmp):
             src = tmp + "/src"
             os.makedirs(src)
             ev = _t(spark, sf_dir, "events").select(
@@ -8504,8 +8369,8 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                        .parquet(out))
                    .start())
             run.awaitTermination()
-            _STREAM_LATE_CACHE[sf_dir] = out
-            out_dir = out
+
+        out_dir = _memo_dir("stream_late", sf_dir, fill) + "/out"
         replayed = spark.read.parquet(out_dir)
         final = replayed.groupBy("window_start", "user_id").agg(
             F.max_by(F.struct("event_count", "value_sum"), "_bid")
@@ -8972,13 +8837,11 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # real-table, data-keyed variant.
         import os
         import shutil
-        import tempfile
 
         _prep(spark)
-        out_dir = _STREAM_STATIC_CACHE.get(sf_dir)
-        if out_dir is None:
+
+        def fill(tmp):
             schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-            tmp = tempfile.mkdtemp(prefix="stream_static_")
             src_dir = tmp + "/src"
             os.makedirs(src_dir)
             try:
@@ -9000,8 +8863,8 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                                  batch.write.mode("append").parquet(out))
                    .start())
             run.awaitTermination()
-            _STREAM_STATIC_CACHE[sf_dir] = out
-            out_dir = out
+
+        out_dir = _memo_dir("stream_static", sf_dir, fill) + "/out"
         replayed = spark.read.parquet(out_dir)
         return (replayed.groupBy("c_mktsegment")
                 .agg(F.count(F.lit(1)).alias("n_events"),
@@ -9177,12 +9040,9 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # schema and v1 rows read NULL for the new column. Staged once
         # per process; the rollup proves both column sets survive
         import os
-        import tempfile
 
-        key = ("schema_evo", sf_dir)
-        root = _SCHEMA_EVO_CACHE.get(key)
-        if root is None:
-            root = tempfile.mkdtemp(prefix="schema_evo_") + "/t"
+        def fill(d):
+            root = d + "/t"
             od = _t(spark, sf_dir, "orders")
             v1 = od.where("o_orderkey % 2 = 0").select(
                 "o_orderkey", "o_orderpriority")
@@ -9192,7 +9052,8 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 .alias("price_cents"))
             v1.write.mode("overwrite").parquet(os.path.join(root, "b1"))
             v2.write.mode("overwrite").parquet(os.path.join(root, "b2"))
-            _SCHEMA_EVO_CACHE[key] = root
+
+        root = _memo_dir("schema_evo", sf_dir, fill) + "/t"
         merged = (spark.read.option("mergeSchema", "true")
                   .parquet(os.path.join(root, "b1"),
                            os.path.join(root, "b2")))
@@ -9216,8 +9077,6 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # ('1-URGENT'), and updates where counts changed; the oracle
         # recomputes both snapshots from orders and replays the
         # null-safe diff logic
-        import tempfile
-
         from bigdata_tag_system_spark.sources.versioned import (
             version_diff, write_version,
         )
@@ -9228,16 +9087,16 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 F.sum(F.round(F.col("o_totalprice") * 100)
                       .cast("long")).alias("cents"))
 
-        path = _TTRAVEL_CACHE.get(sf_dir)
-        if path is None:
+        def fill(d):
             od = _t(spark, sf_dir, "orders")
-            path = tempfile.mkdtemp(prefix="vstore_tt_") + "/s"
+            path = d + "/s"
             write_version(snap(od.where(
                 "o_orderkey % 3 != 0 AND o_orderpriority != '5-LOW'")),
                 path)
             write_version(snap(od.where(
                 "o_orderpriority != '1-URGENT'")), path)
-            _TTRAVEL_CACHE[sf_dir] = path
+
+        path = _memo_dir("vstore_tt", sf_dir, fill) + "/s"
         d = version_diff(spark, path, 1, 2,
                          key_cols=["o_orderpriority"])
         return d.select(
@@ -9312,17 +9171,15 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the row index, so the rollup is closed-form for the oracle;
         # distinct-by-event_id makes the readback replay-proof.
         import os
-        import tempfile
         import time
 
         from bigdata_tag_system_spark.sources.pyds import register
 
         _prep(spark)
         n_rows = 600
-        out_dir = _PYDS_STREAM_CACHE.get(sf_dir)
-        if out_dir is None:
+
+        def fill(tmp):
             register(spark)
-            tmp = tempfile.mkdtemp(prefix="pyds_stream_")
             out, ckpt = tmp + "/out", tmp + "/ckpt"
             stream = (spark.readStream.format("synthetic_events")
                       .option("rows", n_rows).option("chunk", 100)
@@ -9344,8 +9201,8 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                         pass
                 time.sleep(0.5)
             run.stop()
-            _PYDS_STREAM_CACHE[sf_dir] = out
-            out_dir = out
+
+        out_dir = _memo_dir("pyds_stream", sf_dir, fill) + "/out"
         replayed = spark.read.parquet(out_dir).dropDuplicates(
             ["event_id"])
         return (replayed.groupBy("event_type")
@@ -9367,7 +9224,6 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # certifies stage+commit end to end; content is the same pure
         # function of the row index, so the oracle is closed-form.
         import os
-        import tempfile
         import time
 
         from bigdata_tag_system_spark.sources.pyds import (
@@ -9378,10 +9234,9 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         n_rows = 600
         schema_ddl = ("event_id bigint, user_id bigint, "
                       "event_type string, value_i bigint")
-        out_dir = _PYDS_SINK_CACHE.get(sf_dir)
-        if out_dir is None:
+
+        def fill(tmp):
             register(spark)
-            tmp = tempfile.mkdtemp(prefix="pyds_sink_")
             out, ckpt = tmp + "/out", tmp + "/ckpt"
             stream = (spark.readStream.format("synthetic_events")
                       .option("rows", n_rows).option("chunk", 100)
@@ -9421,8 +9276,8 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             if leftovers:
                 raise RuntimeError(
                     f"jsonl_commitlog staging not drained: {leftovers}")
-            _PYDS_SINK_CACHE[sf_dir] = out
-            out_dir = out
+
+        out_dir = _memo_dir("pyds_sink", sf_dir, fill) + "/out"
         replayed = spark.read.schema(schema_ddl).json(
             committed_files(out_dir)).dropDuplicates(["event_id"])
         return (replayed.groupBy("event_type")

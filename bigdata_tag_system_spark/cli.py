@@ -129,15 +129,6 @@ def _load_facts(spark, specs: list[str], rules, user_col: str):
     return cat.facts_for_rules(rules)
 
 
-def _swap_store(merged, target: str) -> None:
-    """Crash-safe in-place store rewrite (shared swap envelope —
-    see :func:`bigdata_tag_system_spark.sources.writers.staged_swap_write`)."""
-    from bigdata_tag_system_spark.sources.writers import staged_swap_write
-
-    staged_swap_write(
-        lambda stage: merged.write.mode("overwrite").parquet(stage), target)
-
-
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
 
@@ -237,7 +228,6 @@ def main(argv: list[str] | None = None) -> int:
         return 0 if ok else 1
 
     from bigdata_tag_system_spark.plans.scenarios import ScenarioRunner
-    from bigdata_tag_system_spark.sources.writers import parquet_merge_upsert
 
     rules = _load_rules(spark, args.rules) if args.rules else []
     if not rules:
@@ -281,6 +271,9 @@ def main(argv: list[str] | None = None) -> int:
         # Under the default "error" policy the probe persists the frame,
         # so the scenario DAG computes once (probe and write both read
         # the cache); --on-duplicates allow skips probe+persist entirely.
+        # The fold merges against the store frame already read above (for
+        # a bucketed store, the registered table scan, so the store side
+        # of the full-outer join runs Exchange-free).
         from bigdata_tag_system_spark.sources.writers import (
             merge_upsert_frames,
             resolve_duplicate_keys,
@@ -288,15 +281,7 @@ def main(argv: list[str] | None = None) -> int:
 
         guarded = resolve_duplicate_keys(
             merged, [args.user_col], args.on_duplicates)
-        if args.store_buckets:
-            # bucketed store: merge against the registered table scan so
-            # the store side of the full-outer join runs Exchange-free
-            merged = merge_upsert_frames(
-                guarded, existing, key_cols=[args.user_col], array_union_cols=[])
-        else:
-            merged = parquet_merge_upsert(
-                spark, guarded, args.store, key_cols=[args.user_col],
-                array_union_cols=[], on_duplicates="allow")
+        merged = merge_upsert_frames(guarded, existing, key_cols=[args.user_col])
 
     try:
         if args.dry_run:
@@ -314,7 +299,9 @@ def main(argv: list[str] | None = None) -> int:
                 spark, merged, target, args.user_col, args.store_buckets)
         elif target == args.store and existing is not None:
             # parquet can't be rewritten while its scan is live: stage then swap
-            _swap_store(merged, target)
+            from bigdata_tag_system_spark.sources.writers import _rewrite_store
+
+            _rewrite_store(merged, target)
         else:
             merged.write.mode("overwrite").parquet(target)
         print(f"wrote scenario {scenario} result to {target}")

@@ -718,10 +718,11 @@ def degree_assortativity(
     # exact decimal integer arithmetic, so the folded sums are
     # VALUE-IDENTICAL to the unioned ones (no float association-order
     # caveat; oracle replays the literal formula and agrees).
-    # Moments widen to decimal(38,0) BEFORE the cross products: on very
-    # large graphs n·sxy and sx² overflow int64 and non-ANSI Spark
-    # wraps silently while the DuckDB oracle's checked BIGINT errors —
-    # decimal keeps both sides exact (the neyman_allocation discipline).
+    # Moments widen to decimal(38,0) BEFORE the cross products and
+    # before the doubling of n and sxy: on very large graphs n·sxy and
+    # sx² overflow int64 and non-ANSI Spark wraps silently while the
+    # DuckDB oracle's checked BIGINT errors — decimal keeps both sides
+    # exact (the neyman_allocation discipline).
     # The endpoint-degree join is rendered as parsed SQL (guide §5);
     # deg's second reference goes through fresh_ids.
     from bigdata_tag_system_spark.functions.sqlrender import fresh_ids
@@ -736,7 +737,7 @@ def degree_assortativity(
         """,
         e=e, deg1=deg, deg2=fresh_ids(deg))
     sums = ed.agg(
-        F.expr("CAST(2 * count(1) AS DECIMAL(38,0))").alias("n"),
+        F.expr("2 * CAST(count(1) AS DECIMAL(38,0))").alias("n"),
         F.expr("CAST(sum(CAST(_da AS DECIMAL(19,0)) + "
                "CAST(_db AS DECIMAL(19,0))) AS DECIMAL(38,0))")
         .alias("sx"),
@@ -744,7 +745,7 @@ def degree_assortativity(
                "CAST(_da AS DECIMAL(19,0)) + "
                "CAST(_db AS DECIMAL(19,0)) * "
                "CAST(_db AS DECIMAL(19,0))) AS DECIMAL(38,0))").alias("sxx"),
-        F.expr("CAST(2 * sum(CAST(_da AS DECIMAL(19,0)) * "
+        F.expr("2 * CAST(sum(CAST(_da AS DECIMAL(19,0)) * "
                "CAST(_db AS DECIMAL(19,0))) AS DECIMAL(38,0))").alias("sxy"),
     )
     nodes = deg.agg(F.count(F.lit(1)).alias("n_nodes"))

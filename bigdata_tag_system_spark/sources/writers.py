@@ -683,8 +683,10 @@ def parquet_merge_upsert(
     Under ``error`` the probe persists ``new`` (one compute, probe + write
     both read the cache); the caller owns the returned frame's lifecycle —
     unpersist ``new`` after materializing, or pass ``allow`` when
-    uniqueness is guaranteed upstream (e.g. a groupBy-on-key output, as in
-    the CLI scenario path) to skip probe and persist entirely.
+    uniqueness is guaranteed upstream (e.g. a groupBy-on-key output) to
+    skip probe and persist entirely. Callers that already hold the store
+    as a DataFrame (the CLI scenario path) call
+    :func:`merge_upsert_frames` instead and skip the second store read.
     """
     new = resolve_duplicate_keys(new, key_cols, on_duplicates)
     existing = read_store_if_exists(spark, path)

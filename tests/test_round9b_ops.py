@@ -397,7 +397,8 @@ class TestLateDropParity:
         # force the staged replay, then inspect the raw emission log
         e._build_queries()["stream_late_drop_parity"](spark, sf_dir) \
             .collect()
-        out_dir = e._STREAM_LATE_CACHE[sf_dir]
+        out_dir = e._memo_dir("stream_late", sf_dir, lambda d: pytest.fail(
+            "the replay ran but left no stream_late memo")) + "/out"
         raw = spark.read.parquet(out_dir)
         bids = {r["_bid"] for r in raw.select("_bid").distinct().collect()}
         assert bids == {0, 1, 2}, f"expected 3 micro-batches, got {bids}"
