@@ -16,6 +16,9 @@ there is one canonical form: ``array_sort(array_distinct(array_union(...)))``
 Scale note: this is the one unavoidable shuffle in the pipeline (join on
 user_id). Both sides are pre-projected to (user_id, tag_ids[, details]) so
 the shuffle moves only key + small arrays, and AQE handles skew.
+
+The merge expressions are rendered as SQL text and parsed once per
+projection (a Column-API build pays a py4j round trip per node).
 """
 
 from __future__ import annotations
@@ -26,6 +29,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bigdata_tag_system_spark.functions.sqlrender import attr, ident
+
 
 class MergeStrategy(str, Enum):
     OVERWRITE = "overwrite"          # MEMORY_ONLY: new wins wholesale
@@ -33,15 +38,10 @@ class MergeStrategy(str, Enum):
     FULL_OUTER_UNION = "full_outer"  # spec §4.3: keep users present on either side
 
 
-def _sorted_union(a, b):
-    return F.array_sort(
-        F.array_distinct(
-            F.array_union(
-                F.coalesce(a, F.array().cast("array<int>")),
-                F.coalesce(b, F.array().cast("array<int>")),
-            )
-        )
-    )
+def _sorted_union(a: str, b: str) -> str:
+    empty = "CAST(array() AS ARRAY<INT>)"
+    return (f"array_sort(array_distinct(array_union("
+            f"coalesce({a}, {empty}), coalesce({b}, {empty}))))")
 
 
 def merge_profiles(
@@ -60,9 +60,10 @@ def merge_profiles(
         return new
 
     has_details = "tag_details" in new.columns and "tag_details" in existing.columns
-    old_cols = [F.col(user_col), F.col("tag_ids").alias("_old_tag_ids")]
+    user = attr(user_col)
+    old_cols = [user, "tag_ids AS _old_tag_ids"]
     if has_details:
-        old_cols.append(F.col("tag_details").alias("_old_tag_details"))
+        old_cols.append("tag_details AS _old_tag_details")
     # non-tag attributes (computed_date, …) the store also carries: in the
     # full-outer branch a user present only in `existing` must keep them,
     # so project them in as _old_* for the coalesce below
@@ -71,8 +72,8 @@ def merge_profiles(
         if c not in (user_col, "tag_ids", "tag_details") and c in existing.columns
     ]
     if strategy == MergeStrategy.FULL_OUTER_UNION:
-        old_cols.extend(F.col(c).alias(f"_old_{c}") for c in extra_cols)
-    old = existing.select(*old_cols)
+        old_cols.extend(f"{ident(c)} AS {ident('_old_' + c)}" for c in extra_cols)
+    old = existing.selectExpr(*old_cols)
 
     if strategy == MergeStrategy.UNION:
         # Users only in `existing` keep their stored row untouched (the
@@ -82,8 +83,7 @@ def merge_profiles(
     else:  # FULL_OUTER_UNION
         joined = new.join(old, on=user_col, how="full_outer")
 
-    out_cols = [F.col(user_col)]
-    out_cols.append(_sorted_union(F.col("tag_ids"), F.col("_old_tag_ids")).alias("tag_ids"))
+    out_cols = [user, f"{_sorted_union('tag_ids', '_old_tag_ids')} AS tag_ids"]
     for c in new.columns:
         if c in (user_col, "tag_ids"):
             continue
@@ -91,23 +91,18 @@ def merge_profiles(
             # stored details survive for tags the new batch didn't re-hit,
             # new details win per key — keeps tag_details consistent with
             # the unioned tag_ids
-            new_d, old_d = F.col("tag_details"), F.col("_old_tag_details")
-            combined = F.map_concat(
-                F.map_filter(old_d, lambda k, _: ~F.map_contains_key(new_d, k)),
-                new_d,
-            )
-            merged_d = (
-                F.when(old_d.isNull(), new_d)
-                .when(new_d.isNull(), old_d)
-                .otherwise(combined)
-            )
-            out_cols.append(merged_d.alias("tag_details"))
+            out_cols.append(
+                "CASE WHEN _old_tag_details IS NULL THEN tag_details"
+                " WHEN tag_details IS NULL THEN _old_tag_details"
+                " ELSE map_concat(map_filter(_old_tag_details,"
+                " (x, y) -> NOT map_contains_key(tag_details, x)), tag_details)"
+                " END AS tag_details")
         elif strategy == MergeStrategy.FULL_OUTER_UNION and c in extra_cols:
             # new wins when present; stored-only users keep their stored value
-            out_cols.append(F.coalesce(F.col(c), F.col(f"_old_{c}")).alias(c))
+            out_cols.append(f"coalesce({ident(c)}, {ident('_old_' + c)}) AS {ident(c)}")
         else:
-            out_cols.append(F.col(c))
-    return joined.select(*out_cols)
+            out_cols.append(ident(c))
+    return joined.selectExpr(*out_cols)
 
 
 def merge_additive_aggregates(

@@ -4,10 +4,10 @@ The reference evaluates tags with one ``filter`` + ``count`` + ``union``
 job **per rule** (``src/engine/tag_computer.py:99-151``,
 ``src/merger/tag_merger.py:31-56``) — N scans, N actions, then a
 union → dropDuplicates → groupBy(collect_list) shuffle to rebuild per-user
-arrays. Here all rules compile to ``when()`` branches evaluated in a single
-projection over one scan:
+arrays. Here all rules compile to ``CASE WHEN`` branches evaluated in a
+single projection over one scan:
 
-    select(user_id, array_compact(array(when(pred_i, tag_i)...)))
+    SELECT user_id, array_compact(array(CASE WHEN pred_i THEN tag_i END, ...))
 
 so "parallel tags" is real columnar parallelism inside whole-stage codegen,
 with **zero shuffles** for the core profile build (the reference's shuffle
@@ -25,6 +25,11 @@ Outputs:
 Tag detail JSON is built natively with ``to_json(struct(...))`` /
 ``map_from_entries`` — replacing the reference's 4 duplicated Python UDFs
 (SURVEY §2.10: ``generate_tag_detail``, ``build_tag_details``).
+
+Every output column is rendered as SQL text from the rule ASTs and parsed
+once (``selectExpr``): the build costs a fixed handful of py4j round trips
+whatever the rule count, where a Column-API build pays one per expression
+node (thousands for a few nested rules).
 """
 
 from __future__ import annotations
@@ -32,10 +37,11 @@ from __future__ import annotations
 import datetime as _dt
 from typing import Iterable, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bigdata_tag_system_spark.rules.compiler import RuleCompiler
+from bigdata_tag_system_spark.functions.sqlrender import attr, sql_lit
+from bigdata_tag_system_spark.rules.compiler import RuleCompiler, check_parser
 from bigdata_tag_system_spark.rules.model import Rule, ordered_fields, required_fields
 
 # presentation text for the human-readable hit reason; comparison ops keep
@@ -49,8 +55,8 @@ def _fmt_threshold(v) -> str:
     return str(v)
 
 
-def _leaf_reason(node) -> Column:
-    """``field=<live value> <op> <threshold>`` as a native Column.
+def _leaf_reason(node) -> str:
+    """``field=<live value> <op> <threshold>`` as native SQL.
 
     The reference builds this string row-at-a-time in a Python UDF
     (``src/engine/tag_computer.py:197-233``, ``_generate_hit_reason`` /
@@ -59,16 +65,15 @@ def _leaf_reason(node) -> Column:
     """
     field = str(node.get("field", ""))
     op = str(node.get("operator", ""))
-    live = F.coalesce(F.col(field).cast("string"), F.lit("null"))
     if op in ("is_null", "is_not_null"):
-        return F.lit(f"{field} {op.replace('_', ' ')}")
+        return sql_lit(f"{field} {op.replace('_', ' ')}")
+    live = f"coalesce(CAST({attr(field)} AS STRING), 'null')"
     shown = _REASON_OP.get(op, op)
-    return F.concat(
-        F.lit(f"{field}="), live,
-        F.lit(f" {shown} {_fmt_threshold(node.get('value'))}"))
+    threshold = f" {shown} {_fmt_threshold(node.get('value'))}"
+    return f"concat({sql_lit(field + '=')}, {live}, {sql_lit(threshold)})"
 
 
-def _reason_col(node) -> Column:
+def _reason_sql(node) -> str:
     """Recursive reason over the whole condition tree (AND/OR/NOT joins).
 
     The reference formats only the top-level condition list and falls back
@@ -76,20 +81,29 @@ def _reason_col(node) -> Column:
     compiler's, so every rule the engine can evaluate gets a full reason.
     """
     if not node:
-        return F.lit("always")
+        return "'always'"
     if "conditions" in node or "logic" in node:
         logic = str(node.get("logic", "AND")).upper()
-        children = [_reason_col(c) for c in node.get("conditions", []) or []]
+        children = [_reason_sql(c) for c in node.get("conditions", []) or []]
         if not children:
-            return F.lit("always")
-        joined = children[0] if len(children) == 1 else F.concat_ws(
-            f" {'OR' if logic == 'OR' else 'AND'} ", *children)
+            return "'always'"
+        sep = sql_lit(f" {'OR' if logic == 'OR' else 'AND'} ")
+        joined = children[0] if len(children) == 1 else (
+            f"concat_ws({sep}, {', '.join(children)})")
         if logic == "NOT":
-            return F.concat(F.lit("NOT("), joined, F.lit(")"))
+            return f"concat('NOT(', {joined}, ')')"
         if len(children) == 1:
             return joined
-        return F.concat(F.lit("("), joined, F.lit(")"))
+        return f"concat('(', {joined}, ')')"
     return _leaf_reason(node)
+
+
+# typed empty detail array, so map_from_entries/explode still resolve
+_EMPTY_DETAILS = (
+    "CAST(array() AS ARRAY<STRUCT<key: STRING, value: STRUCT<tag_name: STRING, "
+    "tag_category: STRING, rule_id: INT, rule_version: STRING, value: STRING, "
+    "reason: STRING, hit_time: TIMESTAMP>>>)"
+)
 
 
 class TagEngine:
@@ -115,11 +129,19 @@ class TagEngine:
         if isinstance(run_ts, str):
             run_ts = _dt.datetime.fromisoformat(run_ts)
         self.run_ts = run_ts
-        self._compiled: list[tuple[Rule, Column]] = [
-            (r, self.compiler.compile(r.conditions)) for r in self.rules
+        # each rule's predicate as Spark SQL text: pure Python, no py4j
+        self._compiled: list[tuple[Rule, str]] = [
+            (r, self.compiler.render(r.conditions)) for r in self.rules
         ]
 
     # -- helpers ------------------------------------------------------------
+
+    @staticmethod
+    def _select(df: DataFrame, *cols: str) -> DataFrame:
+        """``df.selectExpr(*cols)`` once the session's parser is known to
+        read the rendered literals as written."""
+        check_parser(df.sparkSession, *cols)
+        return df.selectExpr(*cols)
 
     def fields(self) -> set[str]:
         """Union of fact columns any rule touches (column pruning)."""
@@ -174,43 +196,35 @@ class TagEngine:
         struct array. Returns
         ``(rule_id, tag_id, tag_name, matched, total, coverage_bp)``.
         """
-        aggs = [F.count(F.lit(1)).alias("_total")] + [
-            F.sum(F.when(pred, 1).otherwise(0)).cast("long")
-            .alias(f"_m{i}")
+        aggs = ["count(1) AS _total"] + [
+            f"CAST(sum(CASE WHEN {pred} THEN 1 ELSE 0 END) AS BIGINT) AS _m{i}"
             for i, (_, pred) in enumerate(self._compiled)
         ]
-        wide = facts.agg(*aggs)
-        rows = F.array(*[
-            F.struct(
-                F.lit(int(r.rule_id)).alias("rule_id"),
-                F.lit(int(r.tag_id)).alias("tag_id"),
-                F.lit(r.tag_name).alias("tag_name"),
-                F.col(f"_m{i}").alias("matched"),
-            )
+        # a projection of aggregates with no grouping is the global
+        # aggregate facts.agg(...) builds
+        wide = self._select(facts, *aggs)
+        rows = ", ".join(
+            f"struct({int(r.rule_id)} AS rule_id, {int(r.tag_id)} AS tag_id, "
+            f"{sql_lit(r.tag_name)} AS tag_name, _m{i} AS matched)"
             for i, (r, _) in enumerate(self._compiled)
-        ])
+        )
         return (
-            wide.select(F.explode(rows).alias("s"), "_total")
-            .select(
-                "s.*",
-                F.col("_total").alias("total"),
-                F.expr("(s.matched * 10000) DIV _total")
-                .alias("coverage_bp"),
-            )
+            self._select(wide, f"explode(array({rows})) AS s", "_total")
+            .selectExpr("s.*", "_total AS total",
+                        "(s.matched * 10000) DIV _total AS coverage_bp")
         )
 
-    def _hit_tag_col(self) -> Column:
+    def _hit_tags_sql(self) -> str:
         """array<int> of tag_ids whose predicate hit, sorted+distinct."""
         branches = [
-            F.when(pred, F.lit(int(rule.tag_id))) for rule, pred in self._compiled
+            f"CASE WHEN {pred} THEN {int(rule.tag_id)} END" for rule, pred in self._compiled
         ]
         if not branches:
-            return F.array().cast("array<int>")
-        return F.array_sort(
-            F.array_distinct(F.array_compact(F.array(*branches)))
-        ).cast("array<int>")
+            return "CAST(array() AS ARRAY<INT>)"
+        return (f"CAST(array_sort(array_distinct(array_compact(array("
+                f"{', '.join(branches)})))) AS ARRAY<INT>)")
 
-    def _detail_entries_col(self) -> Column:
+    def _detail_entries_sql(self) -> str:
         """array<struct<key,value>> for map_from_entries, hit rules only.
 
         Detail fields match the reference's per-hit JSON
@@ -221,34 +235,29 @@ class TagEngine:
         from native expressions, where the reference runs a Python UDF
         per row.
         """
-        ts = F.lit(self.run_ts) if self.run_ts else F.current_timestamp()
+        ts = sql_lit(self.run_ts) if self.run_ts else "current_timestamp()"
         entries = []
         for rule, pred in self._compiled:
             fields = ordered_fields(rule.conditions)
             hit_value = (
-                F.coalesce(F.col(fields[0]).cast("string"), F.lit(""))
-                if fields else F.lit("")
+                f"coalesce(CAST({attr(fields[0])} AS STRING), '')" if fields else "''"
             )
-            detail = F.struct(
-                F.lit(rule.tag_name).alias("tag_name"),
-                F.lit(rule.tag_category).alias("tag_category"),
-                F.lit(int(rule.rule_id)).alias("rule_id"),
-                F.lit(rule.rule_version).alias("rule_version"),
-                hit_value.alias("value"),
-                _reason_col(rule.conditions).alias("reason"),
-                ts.alias("hit_time"),
+            detail = (
+                f"struct({sql_lit(rule.tag_name)} AS tag_name, "
+                f"{sql_lit(rule.tag_category)} AS tag_category, "
+                f"{int(rule.rule_id)} AS rule_id, "
+                f"{sql_lit(rule.rule_version)} AS rule_version, "
+                f"{hit_value} AS value, "
+                f"{_reason_sql(rule.conditions)} AS reason, "
+                f"{ts} AS hit_time)"
             )
             entries.append(
-                F.when(pred, F.struct(F.lit(str(rule.tag_id)).alias("key"), detail.alias("value")))
+                f"CASE WHEN {pred} THEN struct({sql_lit(str(rule.tag_id))} AS key, "
+                f"{detail} AS value) END"
             )
         if not entries:
-            # typed empty so map_from_entries/explode still resolve
-            return F.array().cast(
-                "array<struct<key:string,value:struct<tag_name:string,"
-                "tag_category:string,rule_id:int,rule_version:string,"
-                "value:string,reason:string,hit_time:timestamp>>>"
-            )
-        return F.array_compact(F.array(*entries))
+            return _EMPTY_DETAILS
+        return f"array_compact(array({', '.join(entries)}))"
 
     # -- public operators ----------------------------------------------------
 
@@ -266,19 +275,16 @@ class TagEngine:
         unless ``keep_empty``.
         """
         if computed_date is None:
-            cd = F.current_date()
+            cd = "current_date()"
         else:
-            cd = F.to_date(F.lit(str(computed_date)))
-        cols = [
-            F.col(self.user_col),
-            self._hit_tag_col().alias("tag_ids"),
-        ]
+            cd = f"to_date({sql_lit(str(computed_date))})"
+        cols = [attr(self.user_col), f"{self._hit_tags_sql()} AS tag_ids"]
         if with_details:
-            cols.append(F.map_from_entries(self._detail_entries_col()).alias("tag_details"))
-        cols.append(cd.alias("computed_date"))
-        out = facts.select(*cols)
+            cols.append(f"map_from_entries({self._detail_entries_sql()}) AS tag_details")
+        cols.append(f"{cd} AS computed_date")
+        out = self._select(facts, *cols)
         if not keep_empty:
-            out = out.where(F.size("tag_ids") > 0)
+            out = out.where("size(tag_ids) > 0")
         return out
 
     def observed_profiles(
@@ -302,20 +308,16 @@ class TagEngine:
         prof = self.profiles(
             facts, computed_date=computed_date, keep_empty=keep_empty,
             with_details=with_details)
-        metrics = [
-            F.count(F.lit(1)).alias("profiles"),
-            F.coalesce(F.sum(F.size("tag_ids")), F.lit(0)).alias("tag_hits"),
-        ]
+        metrics = ["count(1) AS profiles",
+                   "coalesce(sum(size(tag_ids)), 0) AS tag_hits"]
         if per_tag:
             metrics += [
-                F.coalesce(
-                    F.sum(F.array_contains("tag_ids", int(r.tag_id)).cast("int")),
-                    F.lit(0),
-                ).alias(f"tag_{r.tag_id}_hits")
+                f"coalesce(sum(CAST(array_contains(tag_ids, {int(r.tag_id)}) AS INT)), 0)"
+                f" AS `tag_{r.tag_id}_hits`"
                 for r in self.rules
             ]
         obs = Observation("tag_metrics")
-        return prof.observe(obs, *metrics), obs
+        return prof.observe(obs, *[F.expr(m) for m in metrics]), obs
 
     def assignments(self, facts: DataFrame) -> DataFrame:
         """Narrow ``(user_id, tag_id, tag_detail json-string)`` relation.
@@ -324,16 +326,12 @@ class TagEngine:
         (user, tag) — the reference's intermediate shape
         (``tag_computer.py:67``) without its per-rule jobs.
         """
-        entries = self._detail_entries_col()
-        exploded = (
-            facts.select(F.col(self.user_col), F.explode(entries).alias("e"))
-            .select(
-                self.user_col,
-                F.col("e.key").cast("int").alias("tag_id"),
-                F.to_json(F.col("e.value")).alias("tag_detail"),
-            )
+        user = attr(self.user_col)
+        return (
+            self._select(facts, user, f"explode({self._detail_entries_sql()}) AS e")
+            .selectExpr(user, "CAST(e.key AS INT) AS tag_id",
+                        "to_json(e.value) AS tag_detail")
         )
-        return exploded
 
     def enriched_assignments(self, facts: DataFrame, definitions: DataFrame) -> DataFrame:
         """Assignments left-joined to a tag-definition dim (broadcast).

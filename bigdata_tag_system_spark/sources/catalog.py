@@ -12,6 +12,10 @@ Scale notes:
 - Each table is scanned **once** per run regardless of rule count (the
   reference groups rules by table then caches; we additionally prune
   columns to the union of rule fields before the join).
+- Each table is also *read* once per catalog instance: the unpruned frame
+  (schema inference, file listing) is memoized, so schema probes and the
+  pruned scans share it. A catalog sees a table as of its first read;
+  ``register`` it again to pick up rewritten files.
 - The cross-table join shuffles only pruned columns on ``user_id``; on a
   real deployment fact tables bucketed by ``user_id`` make it shuffle-free.
 """
@@ -42,17 +46,21 @@ class TableCatalog:
         self.spark = spark
         self.key = key
         self._tables: dict[str, TableSpec] = {}
+        self._frames: dict[str, DataFrame] = {}
 
     def register(self, name: str, path: str, format: str = "parquet") -> "TableCatalog":
         self._tables[name] = TableSpec(name=name, path=path, format=format, key=self.key)
+        self._frames.pop(name, None)
         return self
 
     def table_names(self) -> list[str]:
         return list(self._tables)
 
     def load(self, name: str, columns: Sequence[str] | None = None) -> DataFrame:
-        spec = self._tables[name]
-        df = self.spark.read.format(spec.format).load(spec.path)
+        df = self._frames.get(name)
+        if df is None:
+            spec = self._tables[name]
+            df = self._frames[name] = self.spark.read.format(spec.format).load(spec.path)
         if columns:
             cols = [self.key] + [c for c in columns if c != self.key and c in df.columns]
             df = df.select(*cols)

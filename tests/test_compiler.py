@@ -205,6 +205,49 @@ class TestStrictness:
         assert tiny.where(col).count() == 0
 
 
+class TestParserSafety:
+    """Rendered rule text meets Spark's parser, which substitutes
+    ``${...}`` before lexing and, under
+    ``spark.sql.parser.escapedStringLiterals``, keeps backslash escapes."""
+
+    def test_substitutable_field_name_raises(self):
+        with pytest.raises(RuleCompileError):
+            compile_rule(c("${x}", "=", "a", "string"))
+
+    def test_variable_reference_in_value_is_data(self, spark):
+        app = spark.conf.get("spark.app.name")
+        df = spark.createDataFrame(
+            [("lit", "${spark.app.name}"), ("app", app), ("empty", "")], "k string, s string")
+        assert _hits(df, c("s", "=", "${spark.app.name}", "string")) == {"lit"}
+        assert _hits(df, c("s", "in", ["${x}", "${env:HOME}"], "string")) == set()
+
+    def test_escaped_string_literals_mode_raises(self, spark, tiny):
+        from bigdata_tag_system_spark.operators.tagging import TagEngine
+        from bigdata_tag_system_spark.rules.model import Rule
+
+        plain = c("s", "=", "alpha", "string")
+        spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
+        try:
+            with pytest.raises(RuleCompileError):
+                compile_rule(c("s", "=", "a\\b", "string"))
+            with pytest.raises(RuleCompileError):
+                compile_rule(c("s", "=", "it's", "string"))
+            # a backslash in the tag metadata reaches the detail literals
+            engine = TagEngine([Rule(1, 1, plain, tag_name="a\\b")], user_col="k")
+            with pytest.raises(RuleCompileError):
+                engine.profiles(tiny)
+            with pytest.raises(RuleCompileError):
+                engine.assignments(tiny)
+            with pytest.raises(RuleCompileError):
+                engine.coverage(tiny)
+            # text without an escape reads the same in both modes
+            assert _hits(tiny, plain) == {"a"}
+            ok = TagEngine([Rule(1, 1, plain, tag_name="t")], user_col="k")
+            assert [r.k for r in ok.profiles(tiny).collect()] == ["a"]
+        finally:
+            spark.conf.unset("spark.sql.parser.escapedStringLiterals")
+
+
 class TestModel:
     def test_required_fields_recursive(self):
         from bigdata_tag_system_spark.rules.model import required_fields

@@ -953,6 +953,20 @@ class TestRuleToSql:
         n_col = df.where(compile_rule(rule)).count()
         assert n_sql == n_col == 2
 
+        # decimals render exactly: through a float the threshold became
+        # 123456789012.12346 and this DECIMAL(20,8) row, which satisfies
+        # the rule, failed the rendered WHERE
+        from decimal import Decimal
+
+        dec_rule = {"field": "amt", "operator": ">=",
+                    "value": "123456789012.12345678", "type": "decimal"}
+        assert rule_to_sql(dec_rule) == "(amt >= 123456789012.12345678)"
+        ddf = spark.createDataFrame(
+            [(Decimal("123456789012.12345900"),)], "amt decimal(20,8)")
+        n_sql = ddf.where(F.expr(rule_to_sql(dec_rule))).count()
+        n_col = ddf.where(compile_rule(dec_rule)).count()
+        assert n_sql == n_col == 1
+
 
 class TestNativeBoards:
     """Planted-data ground truths for the round-5 native-ops boards

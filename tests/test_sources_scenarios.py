@@ -68,6 +68,40 @@ class TestCatalog:
         with pytest.raises(KeyError):
             cat.route_fields(["nope"])
 
+    def test_each_table_read_once(self, spark, tmpdir_mod, monkeypatch):
+        # the schema probe behind routing and the pruned scan share one
+        # read per table (each read infers the schema: a Spark job)
+        from pyspark.sql.readwriter import DataFrameReader
+
+        basic = spark.createDataFrame([("u1", 30)], "user_id string, age int")
+        level = spark.createDataFrame([("u1", "VIP2")], "user_id string, user_level string")
+        write_parquet(basic, f"{tmpdir_mod}/once_basic")
+        write_parquet(level, f"{tmpdir_mod}/once_level")
+        loads = []
+        orig = DataFrameReader.load
+
+        def counting(self, path=None, *a, **kw):
+            loads.append(path)
+            return orig(self, path, *a, **kw)
+
+        monkeypatch.setattr(DataFrameReader, "load", counting)
+        cat = (TableCatalog(spark)
+               .register("basic", f"{tmpdir_mod}/once_basic")
+               .register("level", f"{tmpdir_mod}/once_level"))
+        rules = load_rules([{"rule_id": 1, "tag_id": 1, "rule_conditions": {
+            "logic": "AND", "conditions": [
+                {"field": "age", "operator": "<", "value": 40, "type": "number"},
+                {"field": "user_level", "operator": "=", "value": "VIP2"}]}}])
+        facts = cat.facts_for_rules(rules)
+        assert sorted(loads) == sorted([f"{tmpdir_mod}/once_basic", f"{tmpdir_mod}/once_level"])
+        cat.facts_for_rules(rules)
+        assert len(loads) == 2
+        assert facts.collect()[0].asDict() == {"user_id": "u1", "age": 30, "user_level": "VIP2"}
+        # registering a table again drops its memoized read
+        cat.register("level", f"{tmpdir_mod}/once_level")
+        cat.facts_for_rules(rules)
+        assert len(loads) == 3
+
 
 class TestReaders:
     def test_fact_reader_pushdown(self, spark, sf_dir):
