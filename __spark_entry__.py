@@ -243,6 +243,56 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         f"`{c}` AS `{c}`" for c in df.columns])
 
 
+def _stage_parquet(path: str, src_dir: str,
+                   name: str = "events.parquet") -> str:
+    """Stage a parquet table into ``src_dir`` for a file stream source,
+    which reads a DIRECTORY (its basePath): a hardlink per file, copy
+    fallback. Testdata ships single-file parquet; staged/scaled copies
+    are directories of part files, staged as ``{i}_{name}``. Returns
+    ``src_dir``."""
+    import shutil
+
+    os.makedirs(src_dir, exist_ok=True)
+    if os.path.isdir(path):
+        for i, part in enumerate(sorted(os.listdir(path))):
+            if part.endswith(".parquet"):
+                _stage_parquet(os.path.join(path, part), src_dir,
+                               f"{i}_{name}")
+        return src_dir
+    try:
+        os.link(path, f"{src_dir}/{name}")
+    except OSError:
+        shutil.copy(path, f"{src_dir}/{name}")
+    return src_dir
+
+
+def _stage_chunks(src_dir: str, frames: list[DataFrame]) -> str:
+    """Write each frame as ONE parquet file ``{i}.parquet`` in a new
+    ``src_dir``, with mtimes pinned increasing in list order: the file
+    stream source replays by modification time, so arrival order is
+    the list order. Returns ``src_dir``."""
+    os.makedirs(src_dir)
+    for i, frame in enumerate(frames):
+        cdir = f"{src_dir}/chunk{i}"
+        frame.coalesce(1).write.mode("overwrite").parquet(cdir)
+        part = [f for f in os.listdir(cdir) if f.endswith(".parquet")][0]
+        dst = f"{src_dir}/{i}.parquet"
+        os.rename(f"{cdir}/{part}", dst)
+        os.utime(dst, (1_000_000 + i * 1000, 1_000_000 + i * 1000))
+    return src_dir
+
+
+def _time_chunks(ev: DataFrame) -> list[DataFrame]:
+    """``ev`` cut at 2024-01-11 and 2024-01-21 into three time-ranged
+    frames, for :func:`_stage_chunks`."""
+    cuts = [F.lit(c).cast("timestamp") for c in ("2024-01-11", "2024-01-21")]
+    return [
+        ev.where(F.col("ts") < cuts[0]),
+        ev.where((F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1])),
+        ev.where(F.col("ts") >= cuts[1]),
+    ]
+
+
 def _query_vec(spark: SparkSession, sf_dir: str) -> list:
     """The vec_id=0 probe embedding, collected ONCE per process per
     sf_dir (r13, guide §5): nine sim/emb entries used to re-run the
@@ -2348,18 +2398,9 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "tag_id int, tag_name string")
 
         def fill(tmp):
-            import shutil
-
             schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-            # the file stream source requires a DIRECTORY (its basePath);
-            # the test table is a single parquet file — stage a hardlink
-            # (copy fallback) into a temp dir to stream from
-            src_dir = tmp + "/src"
-            os.makedirs(src_dir)
-            try:
-                os.link(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
-            except OSError:
-                shutil.copy(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
+            src_dir = _stage_parquet(f"{sf_dir}/events.parquet",
+                                     tmp + "/src")
             stream = (
                 spark.readStream.schema(schema)
                 .parquet(src_dir)
@@ -2398,8 +2439,6 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the read side keeps the LAST emission per key (update mode
         # re-emits a key whenever late data lands in its window), which
         # must equal the batch GROUP BY exactly.
-        import shutil
-
         from bigdata_tag_system_spark.streaming.rule_stream import (
             windowed_event_aggregates,
         )
@@ -2408,12 +2447,8 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         def fill(tmp):
             schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-            src_dir = tmp + "/src"
-            os.makedirs(src_dir)
-            try:
-                os.link(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
-            except OSError:
-                shutil.copy(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
+            src_dir = _stage_parquet(f"{sf_dir}/events.parquet",
+                                     tmp + "/src")
             stream = spark.readStream.schema(schema).parquet(src_dir)
             if dict(stream.dtypes).get("ts") == "bigint":
                 # parquet TIMESTAMP(NANOS) under nanosAsLong, as in _t
@@ -3154,8 +3189,6 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # build the sessionize replay ONCE per process per sf_dir and
         # return (out_dir, ckpt_dir) — shared by the emission-parity
         # entry and the r11 state-store readback entry
-        import shutil
-
         from bigdata_tag_system_spark.streaming.stateful import (
             sessionize_stream,
         )
@@ -3164,24 +3197,8 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         def fill(tmp):
             schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-            src_dir = tmp + "/src"
-            os.makedirs(src_dir)
-
-            def _stage(src_path, name):
-                # testdata ships single-file parquet; staged/scaled
-                # copies are directories of part files — stage both
-                if os.path.isdir(src_path):
-                    for i, part in enumerate(sorted(os.listdir(src_path))):
-                        if part.endswith(".parquet"):
-                            _stage(os.path.join(src_path, part),
-                                   f"{i}_{name}")
-                    return
-                try:
-                    os.link(src_path, f"{src_dir}/{name}")
-                except OSError:
-                    shutil.copy(src_path, f"{src_dir}/{name}")
-
-            _stage(f"{sf_dir}/events.parquet", "events.parquet")
+            src_dir = _stage_parquet(f"{sf_dir}/events.parquet",
+                                     tmp + "/src")
             stream = spark.readStream.schema(schema).parquet(src_dir)
             sessions = sessionize_stream(
                 stream, gap_minutes=60, watermark="30 minutes")
@@ -3270,25 +3287,7 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         def fill(tmp):
             ev = _t(spark, sf_dir, "events")
             schema = ev.schema
-            src_dir = tmp + "/src"
-            os.makedirs(src_dir)
-            cuts = ["2024-01-11", "2024-01-21"]
-            ranges = [
-                ev.where(F.col("ts") < F.lit(cuts[0]).cast("timestamp")),
-                ev.where((F.col("ts") >= F.lit(cuts[0]).cast("timestamp"))
-                         & (F.col("ts") < F.lit(cuts[1])
-                            .cast("timestamp"))),
-                ev.where(F.col("ts") >= F.lit(cuts[1]).cast("timestamp")),
-            ]
-            for i, chunk in enumerate(ranges):
-                cdir = f"{src_dir}/chunk{i}"
-                chunk.coalesce(1).write.mode("overwrite").parquet(cdir)
-                part = [f for f in os.listdir(cdir)
-                        if f.endswith(".parquet")][0]
-                dst = f"{src_dir}/{i}.parquet"
-                os.rename(f"{cdir}/{part}", dst)
-                os.utime(dst, (1_000_000 + i * 1000,
-                               1_000_000 + i * 1000))
+            src_dir = _stage_chunks(tmp + "/src", _time_chunks(ev))
             stream = (
                 spark.readStream.schema(schema)
                 .option("maxFilesPerTrigger", "1")
@@ -3337,27 +3336,9 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         def fill(tmp):
             ev = spark.read.parquet(f"{sf_dir}/events.parquet")
             schema = ev.schema
-            src_dir = tmp + "/src"
-            os.makedirs(src_dir)
             # three time-ranged chunks: the recursion is
             # order-sensitive, so arrival order must follow event time
-            cuts = ["2024-01-11", "2024-01-21"]
-            ranges = [
-                ev.where(F.col("ts") < F.lit(cuts[0]).cast("timestamp")),
-                ev.where((F.col("ts") >= F.lit(cuts[0]).cast("timestamp"))
-                         & (F.col("ts") < F.lit(cuts[1])
-                            .cast("timestamp"))),
-                ev.where(F.col("ts") >= F.lit(cuts[1]).cast("timestamp")),
-            ]
-            for i, chunk in enumerate(ranges):
-                cdir = f"{src_dir}/chunk{i}"
-                chunk.coalesce(1).write.mode("overwrite").parquet(cdir)
-                part = [f for f in os.listdir(cdir)
-                        if f.endswith(".parquet")][0]
-                dst = f"{src_dir}/{i}.parquet"
-                os.rename(f"{cdir}/{part}", dst)
-                os.utime(dst, (1_000_000 + i * 1000,
-                               1_000_000 + i * 1000))
+            src_dir = _stage_chunks(tmp + "/src", _time_chunks(ev))
             stream = (
                 spark.readStream.schema(schema)
                 .option("maxFilesPerTrigger", "1")
@@ -4823,9 +4804,6 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # 1h) replayed availableNow; inner matches are final, so the
         # replay must equal the batch range join row-for-row. Replay is
         # a pure function of the sf_dir — run once per process
-        import os
-        import shutil
-
         from bigdata_tag_system_spark.streaming.rule_stream import (
             stream_stream_attribution_join,
         )
@@ -4834,14 +4812,8 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         def fill(tmp):
             schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-            src_dir = tmp + "/src"
-            os.makedirs(src_dir)
-            try:
-                os.link(f"{sf_dir}/events.parquet",
-                        f"{src_dir}/events.parquet")
-            except OSError:
-                shutil.copy(f"{sf_dir}/events.parquet",
-                            f"{src_dir}/events.parquet")
+            src_dir = _stage_parquet(f"{sf_dir}/events.parquet",
+                                     tmp + "/src")
             clicks = spark.readStream.schema(schema).parquet(src_dir) \
                 .where(F.col("event_type") == "click")
             purchases = spark.readStream.schema(schema).parquet(src_dir) \
@@ -4938,9 +4910,6 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # NULL purchase once the watermark proves no match can arrive
         # (click ts + 1h < min-of-stream-watermarks); the oracle
         # re-derives exactly that emission set
-        import os
-        import shutil
-
         from bigdata_tag_system_spark.streaming.rule_stream import (
             stream_stream_attribution_join,
         )
@@ -4949,14 +4918,8 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         def fill(tmp):
             schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-            src_dir = tmp + "/src"
-            os.makedirs(src_dir)
-            try:
-                os.link(f"{sf_dir}/events.parquet",
-                        f"{src_dir}/events.parquet")
-            except OSError:
-                shutil.copy(f"{sf_dir}/events.parquet",
-                            f"{src_dir}/events.parquet")
+            src_dir = _stage_parquet(f"{sf_dir}/events.parquet",
+                                     tmp + "/src")
             clicks = spark.readStream.schema(schema).parquet(src_dir) \
                 .where(F.col("event_type") == "click")
             purchases = spark.readStream.schema(schema).parquet(src_dir) \
@@ -5371,8 +5334,6 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # capacity exceeds test-scale cardinality, so the summary is
         # EXACT (err=0) and the oracle is a plain GROUP BY count —
         # the bounded-memory path is exercised separately in pytest
-        import os
-
         from bigdata_tag_system_spark.streaming.stateful import (
             space_saving_stream,
         )
@@ -5382,25 +5343,7 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         def fill(tmp):
             ev = spark.read.parquet(f"{sf_dir}/events.parquet")
             schema = ev.schema
-            src_dir = tmp + "/src"
-            os.makedirs(src_dir)
-            cuts = ["2024-01-11", "2024-01-21"]
-            ranges = [
-                ev.where(F.col("ts") < F.lit(cuts[0]).cast("timestamp")),
-                ev.where((F.col("ts") >= F.lit(cuts[0]).cast("timestamp"))
-                         & (F.col("ts") < F.lit(cuts[1])
-                            .cast("timestamp"))),
-                ev.where(F.col("ts") >= F.lit(cuts[1]).cast("timestamp")),
-            ]
-            for i, chunk in enumerate(ranges):
-                cdir = f"{src_dir}/chunk{i}"
-                chunk.coalesce(1).write.mode("overwrite").parquet(cdir)
-                part = [f for f in os.listdir(cdir)
-                        if f.endswith(".parquet")][0]
-                dst = f"{src_dir}/{i}.parquet"
-                os.rename(f"{cdir}/{part}", dst)
-                os.utime(dst, (1_000_000 + i * 1000,
-                               1_000_000 + i * 1000))
+            src_dir = _stage_chunks(tmp + "/src", _time_chunks(ev))
             stream = (
                 spark.readStream.schema(schema)
                 .option("maxFilesPerTrigger", "1")
@@ -5623,17 +5566,7 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 ups("k % 10 = 5", F.round(F.col("c_acctbal") + 1000, 2))
                 .unionByName(dels("k % 6 = 2")),
             ]
-            src = tmp + "/src"
-            os.makedirs(src)
-            for i, b in enumerate(batches):
-                cdir = f"{src}/chunk{i}"
-                b.coalesce(1).write.mode("overwrite").parquet(cdir)
-                part = [f for f in os.listdir(cdir)
-                        if f.endswith(".parquet")][0]
-                dst = f"{src}/{i}.parquet"
-                os.rename(f"{cdir}/{part}", dst)
-                os.utime(dst, (1_000_000 + i * 1000,
-                               1_000_000 + i * 1000))
+            src = _stage_chunks(tmp + "/src", batches)
             store = tmp + "/store"
             write_parquet(
                 c.where("k % 3 = 0").select(
@@ -6107,21 +6040,12 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # trigger overwriting the sink with the full state — the final
         # table must equal the batch GROUP BY exactly. State is bounded
         # by the 64-bucket geometry, not by stream cardinality
-        import os
-        import shutil
-
         _prep(spark)
 
         def fill(tmp):
             schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-            src_dir = tmp + "/src"
-            os.makedirs(src_dir)
-            try:
-                os.link(f"{sf_dir}/events.parquet",
-                        f"{src_dir}/events.parquet")
-            except OSError:
-                shutil.copy(f"{sf_dir}/events.parquet",
-                            f"{src_dir}/events.parquet")
+            src_dir = _stage_parquet(f"{sf_dir}/events.parquet",
+                                     tmp + "/src")
             stream = spark.readStream.schema(schema) \
                 .option("maxFilesPerTrigger", "1").parquet(src_dir)
             fv = F.least(F.greatest(
@@ -8835,21 +8759,12 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # join exactly. Complements stream_join_parity (stream-stream)
         # and stream_batch_parity (inline literal dim): this is the
         # real-table, data-keyed variant.
-        import os
-        import shutil
-
         _prep(spark)
 
         def fill(tmp):
             schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-            src_dir = tmp + "/src"
-            os.makedirs(src_dir)
-            try:
-                os.link(f"{sf_dir}/events.parquet",
-                        f"{src_dir}/events.parquet")
-            except OSError:
-                shutil.copy(f"{sf_dir}/events.parquet",
-                            f"{src_dir}/events.parquet")
+            src_dir = _stage_parquet(f"{sf_dir}/events.parquet",
+                                     tmp + "/src")
             stream = (spark.readStream.schema(schema).parquet(src_dir)
                       .select("event_id", "user_id", "value"))
             dim = spark.read.parquet(f"{sf_dir}/customer.parquet").select(

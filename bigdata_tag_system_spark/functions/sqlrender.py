@@ -22,7 +22,9 @@ variable substitution (``spark.sql.variable.substitute``, on by
 default) over the raw text before it lexes it, turning ``${env:X}``,
 ``${system:X}`` or ``${conf.key}`` into driver values; so literals spell
 ``$`` as the ``\\u0024`` escape, and identifiers containing ``${`` are
-refused.
+refused. Literals also spell ``{`` and ``}`` as ``\\u007b`` /
+``\\u007d``, so a rendered literal never reads as a frame slot when
+the text is a ``spark.sql(text, **frames)`` template.
 """
 
 from __future__ import annotations
@@ -82,7 +84,7 @@ def _sql_string(s: str) -> str:
     for ch in s:
         if ch in "\\'":
             out.append("\\" + ch)
-        elif ord(ch) < 0x20 or ord(ch) == 0x7F or ch == "$":
+        elif ord(ch) < 0x20 or ord(ch) == 0x7F or ch in "${}":
             out.append(f"\\u{ord(ch):04x}")
         else:
             out.append(ch)
@@ -100,9 +102,9 @@ def sql_lit(value) -> str:
     """Render a Python value as a Spark SQL literal that evaluates to
     what ``F.lit(value)`` does, with the same type: ``None``, bool,
     int, float (``D`` suffix, so not a decimal), ``Decimal`` (``BD``,
-    exact), str (quote, backslash, control characters and ``$``
-    escaped; needs ``spark.sql.parser.escapedStringLiterals`` off),
-    date, datetime (the same instant as ``F.lit``) and lists/tuples
+    exact), str (quote, backslash, control characters, ``$``, ``{``
+    and ``}`` escaped; needs ``spark.sql.parser.escapedStringLiterals``
+    off), date, datetime (the same instant as ``F.lit``) and lists/tuples
     (``array(...)``)."""
     if value is None:
         return "NULL"

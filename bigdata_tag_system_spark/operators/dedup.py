@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from bigdata_tag_system_spark.functions.arrays import _dot_sql, _norm_sql
 from bigdata_tag_system_spark.functions.text import (
     normalize_text,
     portable_hash60,
@@ -665,14 +666,6 @@ def simhash_pairs(
 # Embedding-cosine near-dup
 # ---------------------------------------------------------------------------
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
-
-
 def cosine_dup_pairs(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -692,7 +685,7 @@ def cosine_dup_pairs(
     v = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v"))
     norm = v.select(
         F.col(id_col),
-        F.transform("_v", lambda x: x / _norm(F.col("_v"))).alias("_u"),
+        F.expr(f"transform(_v, x -> x / {_norm_sql('_v')})").alias("_u"),
     )
     if not brute_force:
         # ±1 hyperplanes: sign of xxhash64(dim_index, plane, seed)
@@ -719,7 +712,7 @@ def cosine_dup_pairs(
     else:
         a, b = norm.alias("a"), norm.alias("b")
         joined = a.join(b, on=F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-    cos = _dot(F.col("a._u"), F.col("b._u"))
+    cos = F.expr(_dot_sql("a._u", "b._u"))
     return joined.select(
         F.col(f"a.{id_col}").alias("id_a"),
         F.col(f"b.{id_col}").alias("id_b"),

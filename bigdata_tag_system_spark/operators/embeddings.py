@@ -24,7 +24,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from bigdata_tag_system_spark.functions.arrays import lit_double_array
+from bigdata_tag_system_spark.functions.arrays import (
+    _arr_sql,
+    lit_double_array,
+    lit_double_array_sql,
+)
+from bigdata_tag_system_spark.functions.sqlrender import sql_lit
 
 
 def _vec(col: Column | str) -> Column:
@@ -515,43 +520,23 @@ def project_pca(
     the corpus pass pipelines with the scan like every other embedding
     transform here.
 
-    The whole projection is rendered as ONE parsed SQL expression when
-    the literals have an exact SQL form (r14, guide §5 — the same
-    ``repr``+``D`` idiom as ``lit_double_array``): the Column-API fold
-    paid one py4j round-trip per ±/× node — ~5,400 round-trips (~0.6 s
-    driver-blocked) for a 2×64 projection. The string renders the
-    identical left-fold tree (``0.0 + (e−m)·w + …``), so plan and
-    values are unchanged; non-finite literals fall back to Column ops.
+    The whole projection is rendered as ONE parsed SQL expression
+    (r14, guide §5): a Column-API fold paid one py4j round-trip per ±/×
+    node — ~5,400 round-trips (~0.6 s driver-blocked) for a 2×64
+    projection. The string renders the left fold ``0.0 + (e−m)·w + …``.
     """
-    import math
-
-    flat = [float(x) for comp in components for x in comp] + \
-        [float(m) for m in mean]
-    if (components and isinstance(vec_col, str)
-            and all(math.isfinite(x) for x in flat)):
-        v = f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)"
-        comps_sql = []
-        for comp in components:
-            term = "0.0D"
-            for i, (m, w) in enumerate(zip(mean, comp)):
-                if float(w) == 0.0:
-                    continue
-                term = (f"{term} + (element_at({v}, {i + 1}) - "
-                        f"{float(m)!r}D) * {float(w)!r}D")
-            comps_sql.append(term)
-        return df.withColumn(
-            out_col, F.expr("array(" + ", ".join(comps_sql) + ")"))
-    v = _vec(vec_col)
-    outs = []
+    v = _arr_sql(vec_col)
+    comps_sql = []
     for comp in components:
-        term = F.lit(0.0)
+        term = "0.0D"
         for i, (m, w) in enumerate(zip(mean, comp)):
-            if w == 0.0:
+            if float(w) == 0.0:
                 continue
-            term = term + (F.element_at(v, i + 1) - F.lit(float(m))) \
-                * F.lit(float(w))
-        outs.append(term)
-    return df.withColumn(out_col, F.array(*outs))
+            term = (f"{term} + (element_at({v}, {i + 1}) - "
+                    f"{sql_lit(float(m))}) * {sql_lit(float(w))}")
+        comps_sql.append(term)
+    return df.withColumn(
+        out_col, F.expr("array(" + ", ".join(comps_sql) + ")"))
 
 
 def label_outlier_scores(
@@ -994,7 +979,7 @@ def srp_hyperplanes(dim: int, n_bits: int = 16, seed: int = 7) -> list[list[floa
             for _ in range(n_bits)]
 
 
-def srp_signature(vec_col, hyperplanes: list[list[float]]):
+def srp_signature(vec_col: str, hyperplanes: list[list[float]]) -> Column:
     """``n_bits``-bit SRP signature as ONE bigint: bit j = (v·h_j ≥ 0).
 
     Pure folded expressions (the assign_bucket_from_centroids pattern):
@@ -1004,32 +989,13 @@ def srp_signature(vec_col, hyperplanes: list[list[float]]):
     vectors at angle θ, P[bit agrees] = 1 − θ/π (Goemans–Williamson) —
     the cosine-domain analogue of MinHash's Jaccard property.
     """
-    from bigdata_tag_system_spark.functions.arrays import (
-        lit_double_array_sql,
-    )
-
-    sqls = [lit_double_array_sql(h) for h in hyperplanes]
-    if isinstance(vec_col, str) and all(s is not None for s in sqls):
-        # single-parse fast path (r14, guide §5): the Column-API loop
-        # below costs ~16 HOF constructions of py4j round-trips per
-        # build; this renders the identical fold as one SQL string.
-        v = f"CAST({vec_col} AS ARRAY<DOUBLE>)"
-        terms = []
-        for j, s in enumerate(sqls):
-            dot = (f"aggregate(zip_with({v}, {s}, (a, b) -> a * b), "
-                   f"0.0D, (acc, x) -> acc + x)")
-            terms.append(
-                f"(CASE WHEN {dot} >= 0.0D THEN {1 << j}L ELSE 0L END)")
-        return F.expr("CAST(0 AS BIGINT) + " + " + ".join(terms))
-    v = _vec(vec_col)
-    sig = F.lit(0).cast("bigint")
+    v = _arr_sql(vec_col)
+    terms = []
     for j, h in enumerate(hyperplanes):
-        dot = F.aggregate(
-            F.zip_with(v, lit_double_array(h),
-                       lambda a, b: a * b),
-            F.lit(0.0), lambda acc, x: acc + x)
-        sig = sig + F.when(dot >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-    return sig
+        dot = (f"aggregate(zip_with({v}, {lit_double_array_sql(h)}, "
+               f"(a, b) -> a * b), 0.0D, (acc, x) -> acc + x)")
+        terms.append(f"(CASE WHEN {dot} >= 0.0D THEN {1 << j}L ELSE 0L END)")
+    return F.expr("CAST(0 AS BIGINT) + " + " + ".join(terms))
 
 
 def srp_candidate_pairs(

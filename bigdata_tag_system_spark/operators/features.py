@@ -1005,9 +1005,9 @@ def active_user_board(
 def abc_xyz_classes(
     facts: DataFrame,
     key_col: str,
-    revenue_cents,
-    qty_col,
-    period_col,
+    revenue_cents: str,
+    qty_col: str,
+    period_col: str,
     abc_fences_bp: tuple[int, int] = (8000, 9500),
     xyz_fences_pct: tuple[int, int] = (50, 100),
 ) -> DataFrame:
@@ -1030,138 +1030,80 @@ def abc_xyz_classes(
     (customer_revenue_concentration), fence-based variant being the
     escape hatch at item-dimension scale. One row per (abc, xyz) cell:
     (abc, xyz, n_items, revenue_cents, revenue_share_bp).
+
+    ``key_col`` is a column name; ``revenue_cents``, ``qty_col`` and
+    ``period_col`` are SQL expression text over ``facts`` (a plain
+    column name is one).
     """
-    from pyspark.sql import Window
+    from bigdata_tag_system_spark.functions.sqlrender import ident
 
     a_bp, b_bp = abc_fences_bp
     x_pct, y_pct = xyz_fences_pct
-    # When the measure expressions arrive as SQL text, the whole
-    # classification is rendered as TWO parsed statements split at the
-    # lazy checkpoint (r14, guide §5): the Column-API build paid ~1,300
-    # py4j round-trips (~1 s driver-blocked). The SQL transcribes the
-    # Column expressions verbatim — same two-level aggregation, same
-    # decimal widenings, same fence comparisons — so the analyzed plan
-    # and every class decision are unchanged. Column-typed measures
-    # keep the original path below.
-    if all(isinstance(c, str) for c in
-           (key_col, revenue_cents, qty_col, period_col)):
-        spark = facts.sparkSession
-        kq = "`" + key_col.replace("`", "``") + "`"
-        per_item = spark.sql(
-            f"""
-            WITH pp AS (SELECT {kq} AS _k, {period_col} AS _p,
-                               sum({revenue_cents}) AS _rev,
-                               sum({qty_col}) AS _q
-                        FROM {{facts}} GROUP BY 1, 2)
-            SELECT _k, sum(_rev) AS rev, count(1) AS _n,
-                   sum(_q) AS _sq, sum(_q * _q) AS _sq2
-            FROM pp GROUP BY _k
-            """,
-            facts=facts,
-            # the per-item moments feed the revenue total AND the
-            # ranked window — lazy-checkpoint so the two-level fact
-            # aggregation runs once, not per consumer
-        ).localCheckpoint(eager=False)
-        tot = per_item.agg(F.sum("rev").alias("_tot"))
-        return spark.sql(
-            f"""
-            WITH ranked AS (
-              SELECT /*+ BROADCAST(t) */ _k, rev, _n, _sq, _sq2, _tot,
-                     sum(rev) OVER (ORDER BY rev DESC, _k
-                                    ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND CURRENT ROW) AS _cum
-              FROM {{per_item}} CROSS JOIN {{t}} t),
-            classed AS (
-              SELECT _k, rev, _tot,
-                CASE WHEN CAST(_cum AS DECIMAL(38,0)) * 10000
-                          <= CAST(_tot AS DECIMAL(38,0)) * {int(a_bp)}
-                     THEN 'A'
-                     WHEN CAST(_cum AS DECIMAL(38,0)) * 10000
-                          <= CAST(_tot AS DECIMAL(38,0)) * {int(b_bp)}
-                     THEN 'B' ELSE 'C' END AS abc,
-                CASE WHEN _sq <= 0 THEN 'Z'
-                     WHEN CAST(10000 AS DECIMAL(19,0))
-                          * (CAST(_n AS DECIMAL(19,0))
-                             * CAST(_sq2 AS DECIMAL(19,0))
-                             - CAST(_sq AS DECIMAL(19,0))
-                               * CAST(_sq AS DECIMAL(19,0)))
-                          < CAST({int(x_pct * x_pct)} AS DECIMAL(19,0))
-                            * (CAST(_sq AS DECIMAL(19,0))
-                               * CAST(_sq AS DECIMAL(19,0)))
-                     THEN 'X'
-                     WHEN CAST(10000 AS DECIMAL(19,0))
-                          * (CAST(_n AS DECIMAL(19,0))
-                             * CAST(_sq2 AS DECIMAL(19,0))
-                             - CAST(_sq AS DECIMAL(19,0))
-                               * CAST(_sq AS DECIMAL(19,0)))
-                          < CAST({int(y_pct * y_pct)} AS DECIMAL(19,0))
-                            * (CAST(_sq AS DECIMAL(19,0))
-                               * CAST(_sq AS DECIMAL(19,0)))
-                     THEN 'Y' ELSE 'Z' END AS xyz
-              FROM ranked)
-            SELECT abc, xyz, count(1) AS n_items,
-                   sum(rev) AS revenue_cents,
-                   (10000 * CAST(sum(rev) AS DECIMAL(38,0)))
-                   DIV CAST(first(_tot) AS DECIMAL(38,0))
-                   AS revenue_share_bp
-            FROM classed GROUP BY abc, xyz ORDER BY abc, xyz
-            """,
-            per_item=per_item, t=tot,
-        )
-
-    per_period = facts.groupBy(
-        F.col(key_col).alias("_k"),
-        period_col.alias("_p")).agg(
-        F.sum(revenue_cents).alias("_rev"),
-        F.sum(qty_col).alias("_q"))
-    per_item = per_period.groupBy("_k").agg(
-        F.sum("_rev").alias("rev"),
-        F.count(F.lit(1)).alias("_n"),
-        F.sum("_q").alias("_sq"),
-        F.sum(F.col("_q") * F.col("_q")).alias("_sq2"),
-    # the per-item moments feed the revenue total AND the ranked
-    # window — lazy-checkpoint so the two-level fact aggregation runs
-    # once, not per consumer
+    # The whole classification is rendered as TWO parsed statements
+    # split at the lazy checkpoint (r14, guide §5): a Column-API build
+    # paid ~1,300 py4j round-trips (~1 s driver-blocked).
+    spark = facts.sparkSession
+    kq = ident(key_col)
+    per_item = spark.sql(
+        f"""
+        WITH pp AS (SELECT {kq} AS _k, {period_col} AS _p,
+                           sum({revenue_cents}) AS _rev,
+                           sum({qty_col}) AS _q
+                    FROM {{facts}} GROUP BY 1, 2)
+        SELECT _k, sum(_rev) AS rev, count(1) AS _n,
+               sum(_q) AS _sq, sum(_q * _q) AS _sq2
+        FROM pp GROUP BY _k
+        """,
+        facts=facts,
+        # the per-item moments feed the revenue total AND the
+        # ranked window — lazy-checkpoint so the two-level fact
+        # aggregation runs once, not per consumer
     ).localCheckpoint(eager=False)
-    w = Window.orderBy(F.col("rev").desc(), F.col("_k")) \
-        .rowsBetween(Window.unboundedPreceding, 0)
     tot = per_item.agg(F.sum("rev").alias("_tot"))
-    ranked = per_item.crossJoin(F.broadcast(tot)).select(
-        "_k", "rev", "_n", "_sq", "_sq2", "_tot",
-        F.sum("rev").over(w).alias("_cum"))
-    # every cents·bp / qty²·pct² cross-product widens to decimal BEFORE
-    # multiplying: cum·10000 wraps int64 once total revenue cents pass
-    # ~9.2e14 (≈ $9T — within reach of a decade of a large retailer at
-    # 100 TB), and non-ANSI Spark wraps SILENTLY, misclassing every
-    # fence while the checked-arithmetic oracle errors. decimal(38,0)
-    # moves the ceiling to 1e38 (output schema unchanged: share DIV
-    # returns bigint, revenue_cents stays the int64 sum)
-    dcum = F.col("_cum").cast("decimal(38,0)")
-    dtot = F.col("_tot").cast("decimal(38,0)")
-    dn = F.col("_n").cast("decimal(19,0)")
-    dsq = F.col("_sq").cast("decimal(19,0)")
-    dsq2 = F.col("_sq2").cast("decimal(19,0)")
-    var_num = F.lit(10000).cast("decimal(19,0)") * (dn * dsq2 - dsq * dsq)
-    sq_sq = dsq * dsq
-    classed = ranked.select(
-        "_k", "rev", "_tot",
-        F.when(dcum * 10000 <= dtot * a_bp, "A")
-        .when(dcum * 10000 <= dtot * b_bp, "B")
-        .otherwise("C").alias("abc"),
-        F.when(F.col("_sq") <= 0, "Z")
-        .when(var_num < F.lit(x_pct * x_pct).cast("decimal(19,0)") * sq_sq,
-              "X")
-        .when(var_num < F.lit(y_pct * y_pct).cast("decimal(19,0)") * sq_sq,
-              "Y")
-        .otherwise("Z").alias("xyz"))
-    return (
-        classed.groupBy("abc", "xyz")
-        .agg(F.count(F.lit(1)).alias("n_items"),
-             F.sum("rev").alias("revenue_cents"),
-             F.expr("(10000 * CAST(sum(rev) AS DECIMAL(38,0))) DIV "
-                    "CAST(first(_tot) AS DECIMAL(38,0))")
-             .alias("revenue_share_bp"))
-        .orderBy("abc", "xyz")
+    return spark.sql(
+        f"""
+        WITH ranked AS (
+          SELECT /*+ BROADCAST(t) */ _k, rev, _n, _sq, _sq2, _tot,
+                 sum(rev) OVER (ORDER BY rev DESC, _k
+                                ROWS BETWEEN UNBOUNDED PRECEDING
+                                AND CURRENT ROW) AS _cum
+          FROM {{per_item}} CROSS JOIN {{t}} t),
+        classed AS (
+          SELECT _k, rev, _tot,
+            CASE WHEN CAST(_cum AS DECIMAL(38,0)) * 10000
+                      <= CAST(_tot AS DECIMAL(38,0)) * {int(a_bp)}
+                 THEN 'A'
+                 WHEN CAST(_cum AS DECIMAL(38,0)) * 10000
+                      <= CAST(_tot AS DECIMAL(38,0)) * {int(b_bp)}
+                 THEN 'B' ELSE 'C' END AS abc,
+            CASE WHEN _sq <= 0 THEN 'Z'
+                 WHEN CAST(10000 AS DECIMAL(19,0))
+                      * (CAST(_n AS DECIMAL(19,0))
+                         * CAST(_sq2 AS DECIMAL(19,0))
+                         - CAST(_sq AS DECIMAL(19,0))
+                           * CAST(_sq AS DECIMAL(19,0)))
+                      < CAST({int(x_pct * x_pct)} AS DECIMAL(19,0))
+                        * (CAST(_sq AS DECIMAL(19,0))
+                           * CAST(_sq AS DECIMAL(19,0)))
+                 THEN 'X'
+                 WHEN CAST(10000 AS DECIMAL(19,0))
+                      * (CAST(_n AS DECIMAL(19,0))
+                         * CAST(_sq2 AS DECIMAL(19,0))
+                         - CAST(_sq AS DECIMAL(19,0))
+                           * CAST(_sq AS DECIMAL(19,0)))
+                      < CAST({int(y_pct * y_pct)} AS DECIMAL(19,0))
+                        * (CAST(_sq AS DECIMAL(19,0))
+                           * CAST(_sq AS DECIMAL(19,0)))
+                 THEN 'Y' ELSE 'Z' END AS xyz
+          FROM ranked)
+        SELECT abc, xyz, count(1) AS n_items,
+               sum(rev) AS revenue_cents,
+               (10000 * CAST(sum(rev) AS DECIMAL(38,0)))
+               DIV CAST(first(_tot) AS DECIMAL(38,0))
+               AS revenue_share_bp
+        FROM classed GROUP BY abc, xyz ORDER BY abc, xyz
+        """,
+        per_item=per_item, t=tot,
     )
 
 
@@ -1462,12 +1404,13 @@ def markov_attribution(
     from bigdata_tag_system_spark.functions.sqlrender import (
         fresh_ids,
         ident,
+        sql_lit,
     )
 
     spark = events.sparkSession
     u, t = ident(user_col), ident(type_col)
     ts, i = ident(ts_col), ident(id_col)
-    conv = "'" + str(conv_type).replace("'", "''") + "'"
+    conv = sql_lit(str(conv_type))
     gap_us = int(gap_seconds) * 1_000_000
     rows = spark.sql(
         f"""

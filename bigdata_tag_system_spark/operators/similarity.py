@@ -25,59 +25,23 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bigdata_tag_system_spark.functions.arrays import (
-    lit_double_array,
+    _arr_sql,
+    _cosine_sql,
+    _dot_sql,
+    _norm_sql,
     lit_double_array_sql,
 )
+from bigdata_tag_system_spark.functions.sqlrender import attr
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
-
-
-# SQL-text twins of _dot/_norm (r14, guide §5 driver work): every
-# Column-API higher-order function costs ~5-10 ms of py4j round-trips
-# to construct, and the sim/emb builds chain dozens of them — rendering
-# the identical expression as ONE parsed SQL string is ~40× cheaper to
-# build and parses to the same operator tree (same lambdas, same 0.0D
-# double init), so values are bit-identical.
-
-def _arr_sql(name: str) -> str:
-    """CAST a column (by name) to array<double>, as SQL text."""
-    return f"CAST({name} AS ARRAY<DOUBLE>)"
-
-
-def _dot_sql(a: str, b: str) -> str:
-    return (f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, "
-            f"(acc, v) -> acc + v)")
-
-
-def _norm_sql(a: str) -> str:
-    return (f"sqrt(aggregate(transform({a}, x -> x * x), 0.0D, "
-            f"(acc, v) -> acc + v))")
-
-
-def _cosine_sql(a: str, b: str) -> str:
-    return f"{_dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)})"
-
-
-def cosine_to_query(vec_col: Column | str, query: Sequence[float]) -> Column:
+def cosine_to_query(vec_col: str, query: Sequence[float]) -> Column:
     """cosine(corpus_vec, query) as a pure expression (query folded to literals).
 
     Vectors are cast to double so similarity math runs in f64 regardless of
     the stored element type (float32 accumulation drifts enough to flip
     rank order near ties).
     """
-    qs = lit_double_array_sql(query)
-    if isinstance(vec_col, str) and qs is not None:
-        # single-parse fast path — same expression tree as below
-        return F.expr(_cosine_sql(_arr_sql(vec_col), qs))
-    v = (F.col(vec_col) if isinstance(vec_col, str) else vec_col).cast("array<double>")
-    q = lit_double_array(query)
-    return _dot(v, q) / (_norm(v) * _norm(q))
+    return F.expr(_cosine_sql(_arr_sql(vec_col), lit_double_array_sql(query)))
 
 
 def cosine_to_query_arrow(vec_col: str, query: Sequence[float]) -> Column:
@@ -162,6 +126,21 @@ def _probe_buckets(
     return [c for _, c in qdots[:nprobe]]
 
 
+def _probe_buckets_expr(
+    vec_col: str, centroids: list[list[float]], nprobe: int
+) -> Column:
+    """:func:`_probe_buckets` in-plan, per row: sort (−dot, bucket)
+    structs asc — the vector's norm is constant per row, so raw dot
+    order == cosine order."""
+    structs = ",".join(
+        f"named_struct('negdot', -({_dot_sql(attr(vec_col), s)}), "
+        f"'bucket', {b})"
+        for b, s in enumerate(map(lit_double_array_sql, centroids)))
+    return F.expr(
+        f"transform(slice(array_sort(array({structs})), 1, "
+        f"{int(nprobe)}), s -> s.bucket)")
+
+
 def _scored_topk(
     df: DataFrame, query: Sequence[float], k: int, vec_col: str, id_col: str
 ) -> DataFrame:
@@ -173,7 +152,7 @@ def _scored_topk(
 
 
 def assign_ivf_bucket(
-    vec_col: Column | str, dim: int, num_buckets: int = 16, seed: int = 42
+    vec_col: str, dim: int, num_buckets: int = 16, seed: int = 42
 ) -> Column:
     """Nearest-centroid bucket id over the seeded pseudo-random centroids."""
     return assign_bucket_from_centroids(
@@ -256,19 +235,14 @@ def fit_centroids(
     return [list(map(float, c)) for c in cents]
 
 
-def _best_dot(vec_col: Column | str, centroids: list[list[float]]) -> Column:
+def _best_dot(vec_col: str, centroids: list[list[float]]) -> Column:
     """max over centroids of dot(vec, centroid) — centroids folded to
-    literals (same envelope as :func:`assign_bucket_from_centroids`).
-    With a column NAME and SQL-renderable centroids, the whole max-dot
-    builds as one parsed expression (r14 — see _dot_sql)."""
-    sqls = [lit_double_array_sql(cen) for cen in centroids]
-    if isinstance(vec_col, str) and all(s is not None for s in sqls):
-        dots = [_dot_sql(vec_col, s) for s in sqls]
-        return F.expr(dots[0] if len(dots) == 1
-                      else "greatest(" + ",".join(dots) + ")")
-    vc = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    dots = [_dot(vc, lit_double_array(cen)) for cen in centroids]
-    return F.greatest(*dots) if len(dots) > 1 else dots[0]
+    literals (same envelope as :func:`assign_bucket_from_centroids`),
+    the whole max-dot one parsed expression."""
+    dots = [_dot_sql(attr(vec_col), lit_double_array_sql(cen))
+            for cen in centroids]
+    return F.expr(dots[0] if len(dots) == 1
+                  else "greatest(" + ",".join(dots) + ")")
 
 
 def _best_dot_arrow(vec_col: str, centroids: list[list[float]]) -> Column:
@@ -369,7 +343,7 @@ def _kmeans_parallel_init(
 
     # weight candidates by nearest-assignment counts (one corpus pass)
     assign = (assign_bucket_from_centroids_arrow("_u", cands) if impl == "arrow"
-              else assign_bucket_from_centroids(F.col("_u"), cands))
+              else assign_bucket_from_centroids("_u", cands))
     counts = {
         r2["_b"]: r2["n"]
         for r2 in u.select(assign.alias("_b"))
@@ -457,7 +431,7 @@ def fit_centroids_distributed(
     for _ in range(iterations):
         assign = (
             assign_bucket_from_centroids_arrow("_u", cents) if impl == "arrow"
-            else assign_bucket_from_centroids(F.col("_u"), cents))
+            else assign_bucket_from_centroids("_u", cents))
         cells = (
             u.select(
                 assign.alias("_b"),
@@ -481,9 +455,11 @@ def fit_centroids_distributed(
 
 
 def assign_bucket_from_centroids(
-    vec_col: Column | str, centroids: list[list[float]]
+    vec_col: str, centroids: list[list[float]]
 ) -> Column:
-    """Nearest-centroid bucket id for explicit centroid vectors.
+    """Nearest-centroid bucket id for explicit centroid vectors: the
+    first index achieving the max dot, NULL when the best dot is NaN
+    or NULL.
 
     Centroids fold into Catalyst literals — JVM-side and codegen-friendly
     for small/medium k, but the expression (and each task binary) grows
@@ -492,26 +468,12 @@ def assign_bucket_from_centroids(
     centroid matrix once and scores each Arrow batch with one BLAS
     matmul.
     """
-    sqls = [lit_double_array_sql(cen) for cen in centroids]
-    if isinstance(vec_col, str) and all(s is not None for s in sqls):
-        # single-parse fast path (r14): first index achieving the max
-        # dot, exactly like the coalesce-of-whens below (array_position
-        # returns the FIRST occurrence; array_max ≡ greatest over the
-        # same doubles). The isnan guard preserves the one divergent
-        # case: a NaN best dot made every `==` comparison false below
-        # (NULL bucket), while array_position would have matched it.
-        v = _arr_sql(vec_col)
-        ds = "array(" + ",".join(_dot_sql(v, s) for s in sqls) + ")"
-        return F.expr(
-            f"IF(isnan(array_max({ds})), NULL, "
-            f"CAST(array_position({ds}, array_max({ds})) AS INT) - 1)")
-    v = (F.col(vec_col) if isinstance(vec_col, str) else vec_col).cast("array<double>")
-    dots = [
-        _dot(v, lit_double_array(cen)).alias(f"_d{c}")
-        for c, cen in enumerate(centroids)
-    ]
-    best = F.greatest(*dots) if len(dots) > 1 else dots[0]
-    return F.coalesce(*[F.when(dots[c] == best, F.lit(c)) for c in range(len(dots))])
+    v = _arr_sql(vec_col)
+    ds = "array(" + ",".join(_dot_sql(v, lit_double_array_sql(cen))
+                             for cen in centroids) + ")"
+    return F.expr(
+        f"IF(isnan(array_max({ds})), NULL, "
+        f"CAST(array_position({ds}, array_max({ds})) AS INT) - 1)")
 
 
 def assign_bucket_from_centroids_arrow(
@@ -777,30 +739,7 @@ def knn_join_bucketed(
         F.col(c_vec).cast("array<double>").alias("_c"),
         assign_bucket_from_centroids(c_vec, centroids).alias("_bucket"),
     )
-    # rank centroids per query in-plan: sort (−dot, bucket) structs asc —
-    # query norm is constant per row, so raw dot order == cosine order.
-    # Rendered as ONE parsed expression when the centroids have SQL
-    # literal form (r14 — see _dot_sql); the Column-API fallback builds
-    # the identical tree.
-    sqls = [lit_double_array_sql(cen) for cen in centroids]
-    if all(s is not None for s in sqls):
-        structs = ",".join(
-            f"named_struct('negdot', -({_dot_sql('_q', s)}), 'bucket', {b})"
-            for b, s in enumerate(sqls))
-        probes = F.expr(
-            f"transform(slice(array_sort(array({structs})), 1, "
-            f"{int(nprobe)}), s -> s.bucket)")
-    else:
-        ranked = F.array_sort(
-            F.array(*[
-                F.struct(
-                    (-_dot(F.col("_q"), lit_double_array(cen))).alias("negdot"),
-                    F.lit(b).alias("bucket"),
-                )
-                for b, cen in enumerate(centroids)
-            ])
-        )
-        probes = F.transform(F.slice(ranked, 1, nprobe), lambda s: s["bucket"])
+    probes = _probe_buckets_expr("_q", centroids, nprobe)
     qb = q.select(q_id, "_q", F.explode(probes).alias("_bucket"))
     scored = qb.join(c, "_bucket").select(
         q_id,

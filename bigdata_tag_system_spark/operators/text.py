@@ -1271,18 +1271,10 @@ def tfidf_cosine_topk(
     # the stop-term prune, the postings self-join, the IEEE cosine —
     # so the analyzed plan and every value are unchanged; only the
     # driver RPC count drops.
+    from bigdata_tag_system_spark.functions.sqlrender import fresh_ids, ident
+
     spark = df.sparkSession
-    i = "`" + id_col.replace("`", "``") + "`"
-    t = "`" + text_col.replace("`", "``") + "`"
-
-    def _fresh(rel):
-        # repeated references of ONE spark.sql DataFrame parameter
-        # share attribute ids across join/union branches, which trips
-        # Catalyst's constraint rewrites (key-not-found in
-        # AttributeMap, Spark 4.1); a same-name alias projection mints
-        # fresh ids per reference (the _cogroup_asof_prologue trick)
-        return rel.select(*[F.col(c).alias(c) for c in rel.columns])
-
+    i, t = ident(id_col), ident(text_col)
     posts = spark.sql(
         f"""
         WITH toks AS (
@@ -1297,7 +1289,7 @@ def tfidf_cosine_topk(
         FROM tf JOIN dfreq USING (term) CROSS JOIN nd
         WHERE df / n_docs <= {float(max_df_ratio)!r}D
         """,
-        d1=df, d2=_fresh(df),
+        d1=df, d2=fresh_ids(df),
         # postings feed THREE consumers (norms + both join sides) —
         # lazy-checkpoint so the tokenize→tf→df→idf chain is computed
         # and analyzed once, not per consumer (stays one job; the
@@ -1318,7 +1310,7 @@ def tfidf_cosine_topk(
         FROM a JOIN b USING (term) WHERE _ia < _ib
         GROUP BY _ia, _ib
         """,
-        p1=_fresh(posts), p2=_fresh(posts))
+        p1=fresh_ids(posts), p2=fresh_ids(posts))
     scored = (
         dots.join(norms.select(F.col(id_col).alias("_ia"),
                                F.col("_norm").alias("_na")), "_ia")

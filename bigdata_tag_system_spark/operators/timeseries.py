@@ -170,8 +170,9 @@ def _cogroup_asof_prologue(
     column). A same-name Alias mints fresh expression ids on every
     column — a zero-cost projection that breaks the identity.
     """
-    left = left.select(*[F.col(c).alias(c) for c in left.columns])
-    right = right.select(*[F.col(c).alias(c) for c in right.columns])
+    from bigdata_tag_system_spark.functions.sqlrender import fresh_ids
+
+    left, right = fresh_ids(left), fresh_ids(right)
     rts = right_ts or ts
     value_cols = value_cols or [
         c for c in right.columns if c not in (on, rts)
@@ -241,66 +242,31 @@ def asof_join_cogrouped(
     left, right, rts, value_cols, out_schema = _cogroup_asof_prologue(
         left, right, on, ts, right_ts, value_cols, suffix)
 
+    # one merge body for both modes: per-key groups meet whole
+    # (``by=None``); coarse buckets carry many keys each, so
+    # merge_asof matches within the bucket ``by`` the key
+    by, key = None, on
     if coarse_buckets is not None:
         nb = int(coarse_buckets)
         if nb < 1:
             raise ValueError(
                 f"coarse_buckets must be >= 1, got {coarse_buckets}")
         bk = F.pmod(F.xxhash64(F.col(on)), F.lit(nb))
-        lb = left.withColumn("_bk", bk)
-        rb = right.withColumn("_bk", bk)
-
-        def _merge_bucket(l: "pd.DataFrame",
-                          r: "pd.DataFrame") -> "pd.DataFrame":
-            l = l.drop(columns=["_bk"])
-            r = r.drop(columns=["_bk"])
-            if not l.empty:
-                _reject_null_keys("left", bool(l[ts].isna().any()))
-                if bool(l[on].isna().any()):
-                    raise ValueError(
-                        "NULL join keys in the left frame: "
-                        "coarse_buckets mode cannot match them — use "
-                        "the per-key default")
-            if not r.empty:
-                _reject_null_keys("right", bool(r[rts].isna().any()))
-                if bool(r[on].isna().any()):
-                    raise ValueError(
-                        "NULL join keys in the right frame: "
-                        "coarse_buckets mode cannot match them — use "
-                        "the per-key default")
-            if l.empty:
-                return pd.DataFrame(
-                    columns=list(l.columns) + [f"{c}{suffix}"
-                                               for c in value_cols])
-            if r.empty:
-                out = l.copy()
-                for c in value_cols:
-                    out[f"{c}{suffix}"] = None
-                return out
-            ls = l.sort_values(ts, kind="mergesort")
-            rs = (r[[on, rts] + value_cols]
-                  .sort_values([rts] + value_cols, kind="mergesort")
-                  .rename(columns={c: f"{c}{suffix}"
-                                   for c in value_cols}))
-            merged = pd.merge_asof(
-                ls, rs, left_on=ts, right_on=rts, by=on,
-                direction="backward", suffixes=("", "_r"))
-            drop = [rts] if rts != ts and rts in merged.columns else []
-            if rts == ts and f"{ts}_r" in merged.columns:
-                drop = [f"{ts}_r"]
-            return merged.drop(columns=drop, errors="ignore")
-
-        return (
-            lb.groupBy("_bk")
-            .cogroup(rb.groupBy("_bk"))
-            .applyInPandas(_merge_bucket, schema=out_schema)
-        )
+        left, right = left.withColumn("_bk", bk), right.withColumn("_bk", bk)
+        by, key = on, "_bk"
 
     def _merge(l: "pd.DataFrame", r: "pd.DataFrame") -> "pd.DataFrame":
-        if not l.empty:
-            _reject_null_keys("left", bool(l[ts].isna().any()))
-        if not r.empty:
-            _reject_null_keys("right", bool(r[rts].isna().any()))
+        if by is not None:
+            l, r = l.drop(columns=["_bk"]), r.drop(columns=["_bk"])
+        for side, frame, t in (("left", l, ts), ("right", r, rts)):
+            if frame.empty:
+                continue
+            _reject_null_keys(side, bool(frame[t].isna().any()))
+            if by is not None and bool(frame[on].isna().any()):
+                raise ValueError(
+                    f"NULL join keys in the {side} frame: "
+                    "coarse_buckets mode cannot match them — use "
+                    "the per-key default")
         if l.empty:
             return pd.DataFrame(
                 columns=list(l.columns) + [f"{c}{suffix}"
@@ -311,11 +277,11 @@ def asof_join_cogrouped(
                 out[f"{c}{suffix}"] = None
             return out
         ls = l.sort_values(ts, kind="mergesort")
-        rs = (r[[rts] + value_cols]
+        rs = (r[([on] if by is not None else []) + [rts] + value_cols]
               .sort_values([rts] + value_cols, kind="mergesort")
               .rename(columns={c: f"{c}{suffix}" for c in value_cols}))
         merged = pd.merge_asof(
-            ls, rs, left_on=ts, right_on=rts, direction="backward",
+            ls, rs, left_on=ts, right_on=rts, by=by, direction="backward",
             suffixes=("", "_r"))
         drop = [rts] if rts != ts and rts in merged.columns else []
         if rts == ts and f"{ts}_r" in merged.columns:
@@ -323,8 +289,8 @@ def asof_join_cogrouped(
         return merged.drop(columns=drop, errors="ignore")
 
     return (
-        left.groupBy(on)
-        .cogroup(right.groupBy(on))
+        left.groupBy(key)
+        .cogroup(right.groupBy(key))
         .applyInPandas(_merge, schema=out_schema)
     )
 

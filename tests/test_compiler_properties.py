@@ -35,9 +35,12 @@ from bigdata_tag_system_spark.rules.compiler import compile_rule
 
 # text Spark's parser would variable-substitute if it met it unescaped
 DOLLARS = ["${env:HOME}", "${spark.app.name}", "${x}"]
+# text a spark.sql(text, **frames) template would read as a frame slot
+BRACES = ["{", "}", "{events}"]
 # text that breaks naive SQL quoting, LIKE patterns or comments
 HOSTILE = [None, "", "it's", "a\\b", "x\ny", "--c", "/*d*/", "100%", "a_b",
-           "ü€中", "'); DROP TABLE t; --", "\\'", "%_", "tab\there", *DOLLARS]
+           "ü€中", "'); DROP TABLE t; --", "\\'", "%_", "tab\there", *DOLLARS,
+           *BRACES]
 
 ROWS = [
     {"a": a, "s": s, "arr": arr}
@@ -58,7 +61,7 @@ ARR_VALUES = [1, 2, 9]
 # fragments of the hostile rows, so text operators hit as well as miss
 FRAGMENTS = ["'", "\\", "\n", "--", "/*", "*/", "%", "_", "ü", "€中", "it's",
              "a\\b", "x\ny", "100%", "a_b", "DROP", "; --", "\t", "zz",
-             *DOLLARS, "$", "{"]
+             *DOLLARS, "$", "{", "}"]
 
 
 # ---------------------------------------------------------------------------

@@ -235,6 +235,41 @@ class TestSimilarity:
         assert top[0]["vec_id"] == 7 and top[0]["cosine"] == pytest.approx(1.0, abs=1e-5)
         assert top[0]["cosine"] >= top[1]["cosine"] >= top[2]["cosine"]
 
+    def test_vector_column_names_resolve_like_col(self, emb):
+        # vector arguments are column NAMES, resolved as F.col would:
+        # `emb-1` is one column (not emb minus 1), `s.v` a struct field
+        from bigdata_tag_system_spark.operators.embeddings import (
+            project_pca, srp_hyperplanes, srp_signature,
+        )
+
+        q = emb.where("vec_id = 7").collect()[0]["embedding"]
+        dim = len(q)
+        cents = [list(r["embedding"]) for r in
+                 emb.where("vec_id between 1 and 4").orderBy("vec_id")
+                 .collect()]
+        planes = srp_hyperplanes(dim=dim, n_bits=8, seed=3)
+        mean = [0.01 * i for i in range(dim)]
+        comps = [[1.0 if i == j else 0.0 for i in range(dim)]
+                 for j in range(2)]
+        named = emb.where("vec_id < 40").select(
+            "vec_id", F.col("embedding").alias("e"),
+            F.col("embedding").alias("emb-1"),
+            F.struct(F.col("embedding").alias("v")).alias("s"))
+
+        def outputs(name):
+            return [tuple(r) for r in project_pca(
+                named, mean, comps, vec_col=name).select(
+                "vec_id",
+                S.cosine_to_query(name, q).alias("cos"),
+                S.assign_bucket_from_centroids(name, cents).alias("b"),
+                srp_signature(name, planes).alias("sig"),
+                "pca").orderBy("vec_id").collect()]
+
+        want = outputs("e")
+        assert len(want) == 40
+        assert outputs("emb-1") == want
+        assert outputs("s.v") == want
+
     def test_arrow_impl_matches_expr(self, emb):
         q = emb.where("vec_id = 7").collect()[0]["embedding"]
         expr = [(r["vec_id"], round(r["cosine"], 9))

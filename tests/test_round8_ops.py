@@ -622,8 +622,6 @@ class TestAsofJoinNearest:
 
 class TestAbcXyz:
     def test_hand_built_matrix(self, spark):
-        import pyspark.sql.functions as F
-
         from bigdata_tag_system_spark.operators.features import (
             abc_xyz_classes,
         )
@@ -638,8 +636,7 @@ class TestAbcXyz:
         df = spark.createDataFrame(
             rows, "item long, period int, cents long, qty long")
         out = {(r["abc"], r["xyz"]): r for r in abc_xyz_classes(
-            df, "item", F.col("cents"), F.col("qty"),
-            F.col("period")).collect()}
+            df, "item", "cents", "qty", "period").collect()}
         assert out[("A", "X")]["n_items"] == 1
         assert out[("A", "X")]["revenue_cents"] == 8000
         assert out[("A", "X")]["revenue_share_bp"] == 8000
@@ -647,8 +644,6 @@ class TestAbcXyz:
         assert ("C", "X") in out
 
     def test_fence_boundary_is_inclusive_for_a(self, spark):
-        import pyspark.sql.functions as F
-
         from bigdata_tag_system_spark.operators.features import (
             abc_xyz_classes,
         )
@@ -658,16 +653,13 @@ class TestAbcXyz:
         df = spark.createDataFrame(
             rows, "item long, period int, cents long, qty long")
         out = {r["abc"]: r["n_items"] for r in abc_xyz_classes(
-            df, "item", F.col("cents"), F.col("qty"),
-            F.col("period")).collect()}
+            df, "item", "cents", "qty", "period").collect()}
         assert out.get("A") == 1 and out.get("C") == 1
 
     def test_int64_overflow_boundary_classes_exactly(self, spark):
         # total 2e15 cents: cum·10000 = 1.6e19 > int64 max (9.22e18);
         # without the decimal(38,0) widening the fence comparison wraps
         # and misclasses both items (red before the guard, green after)
-        import pyspark.sql.functions as F
-
         from bigdata_tag_system_spark.operators.features import (
             abc_xyz_classes,
         )
@@ -677,8 +669,7 @@ class TestAbcXyz:
         df = spark.createDataFrame(
             rows, "item long, period int, cents long, qty long")
         out = {r["abc"]: r for r in abc_xyz_classes(
-            df, "item", F.col("cents"), F.col("qty"),
-            F.col("period")).collect()}
+            df, "item", "cents", "qty", "period").collect()}
         assert set(out) == {"A", "C"}
         assert out["A"]["revenue_cents"] == 1_600_000_000_000_000
         assert out["A"]["revenue_share_bp"] == 8000
@@ -835,9 +826,64 @@ class TestAbcXyzSqlParity:
                 for _ in range(600)]
         df = spark.createDataFrame(
             rows, "item long, period int, cents long, qty long")
-        col_path = sorted(tuple(r) for r in abc_xyz_classes(
+        col_path = sorted(tuple(r) for r in _abc_xyz_columns(
             df, "item", F.col("cents"), F.col("qty"),
             F.col("period")).collect())
         sql_path = sorted(tuple(r) for r in abc_xyz_classes(
             df, "item", "cents", "qty", "period").collect())
         assert sql_path == col_path
+
+
+def _abc_xyz_columns(facts, key_col, revenue_cents, qty_col, period_col,
+                     abc_fences_bp=(8000, 9500), xyz_fences_pct=(50, 100)):
+    """The Column-API build ``abc_xyz_classes`` kept next to its SQL
+    text until both became one; the reference its SQL must match."""
+    import pyspark.sql.functions as F
+    from pyspark.sql import Window
+
+    a_bp, b_bp = abc_fences_bp
+    x_pct, y_pct = xyz_fences_pct
+    per_period = facts.groupBy(
+        F.col(key_col).alias("_k"),
+        period_col.alias("_p")).agg(
+        F.sum(revenue_cents).alias("_rev"),
+        F.sum(qty_col).alias("_q"))
+    per_item = per_period.groupBy("_k").agg(
+        F.sum("_rev").alias("rev"),
+        F.count(F.lit(1)).alias("_n"),
+        F.sum("_q").alias("_sq"),
+        F.sum(F.col("_q") * F.col("_q")).alias("_sq2"),
+    ).localCheckpoint(eager=False)
+    w = Window.orderBy(F.col("rev").desc(), F.col("_k")) \
+        .rowsBetween(Window.unboundedPreceding, 0)
+    tot = per_item.agg(F.sum("rev").alias("_tot"))
+    ranked = per_item.crossJoin(F.broadcast(tot)).select(
+        "_k", "rev", "_n", "_sq", "_sq2", "_tot",
+        F.sum("rev").over(w).alias("_cum"))
+    dcum = F.col("_cum").cast("decimal(38,0)")
+    dtot = F.col("_tot").cast("decimal(38,0)")
+    dn = F.col("_n").cast("decimal(19,0)")
+    dsq = F.col("_sq").cast("decimal(19,0)")
+    dsq2 = F.col("_sq2").cast("decimal(19,0)")
+    var_num = F.lit(10000).cast("decimal(19,0)") * (dn * dsq2 - dsq * dsq)
+    sq_sq = dsq * dsq
+    classed = ranked.select(
+        "_k", "rev", "_tot",
+        F.when(dcum * 10000 <= dtot * a_bp, "A")
+        .when(dcum * 10000 <= dtot * b_bp, "B")
+        .otherwise("C").alias("abc"),
+        F.when(F.col("_sq") <= 0, "Z")
+        .when(var_num < F.lit(x_pct * x_pct).cast("decimal(19,0)") * sq_sq,
+              "X")
+        .when(var_num < F.lit(y_pct * y_pct).cast("decimal(19,0)") * sq_sq,
+              "Y")
+        .otherwise("Z").alias("xyz"))
+    return (
+        classed.groupBy("abc", "xyz")
+        .agg(F.count(F.lit(1)).alias("n_items"),
+             F.sum("rev").alias("revenue_cents"),
+             F.expr("(10000 * CAST(sum(rev) AS DECIMAL(38,0))) DIV "
+                    "CAST(first(_tot) AS DECIMAL(38,0))")
+             .alias("revenue_share_bp"))
+        .orderBy("abc", "xyz")
+    )

@@ -613,6 +613,36 @@ class TestMarkovAttribution:
             0.0, abs=1e-6)
         assert out["click"]["p_conv_base"] == pytest.approx(0.5, abs=1e-6)
 
+    def test_conv_type_is_plain_text(self, spark):
+        # the conversion type enters a spark.sql template as a literal:
+        # `{...}` must not read as a frame slot and `${...}` must not be
+        # variable-substituted, so it matches only the event holding
+        # exactly that text, never the app name it would expand to
+        from bigdata_tag_system_spark.operators.features import (
+            markov_attribution,
+        )
+        import datetime as dt
+
+        conv = "${spark.app.name}"
+        app = spark.conf.get("spark.app.name")
+        t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
+        s = dt.timedelta(seconds=60)
+        rows = [
+            (1, t0, 1, "click", 0.0, None),
+            (2, t0 + s, 1, conv, 1.0, None),
+            (3, t0, 2, "view", 0.0, None),
+            (4, t0 + s, 2, app, 1.0, None),
+        ]
+        df = spark.createDataFrame(
+            rows, "event_id long, ts timestamp, user_id long, "
+                  "event_type string, value double, props string")
+        out = {r["channel"]: r
+               for r in markov_attribution(df, conv_type=conv).collect()}
+        assert set(out) == {"click", "view", app}
+        assert out["click"]["p_conv_base"] == pytest.approx(0.5, abs=1e-6)
+        assert out["click"]["removal_effect"] == pytest.approx(1.0, abs=1e-6)
+        assert out["view"]["removal_effect"] == pytest.approx(0.0, abs=1e-6)
+
 
 class TestConformalCoverage:
     def test_hand_computed_quantile_and_coverage(self, spark):
