@@ -70,12 +70,13 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--output", help="write result here instead of --store")
     p.add_argument("--on-duplicates", default="error",
                    choices=["error", "dedupe", "allow"],
-                   help="duplicate-user-key policy for store upserts: the "
-                        "scenario output is one row per FACT row, so a fact "
-                        "table with duplicate user keys would fan out through "
-                        "the merge join and silently duplicate store rows. "
-                        "error (default) raises with sample keys; dedupe keeps "
-                        "one deterministic row per key; allow skips the probe "
+                   help="duplicate-user-key policy for every run with "
+                        "--store: the scenario batch is one row per FACT row, "
+                        "so a fact table with duplicate user keys would write "
+                        "duplicate store rows. error (default) raises with "
+                        "sample keys (not under --dry-run); dedupe keeps "
+                        "one deterministic batch row per key, before the "
+                        "stored tags are merged in; allow skips the probe "
                         "when uniqueness is guaranteed upstream")
     p.add_argument("--tag-ids", help="comma-separated tag ids (tags/user-tags modes)")
     p.add_argument("--user-ids", help="comma-separated user ids (users/user-tags modes)")
@@ -254,34 +255,32 @@ def main(argv: list[str] | None = None) -> int:
 
     runner = ScenarioRunner(rules, user_col=args.user_col, as_of=args.as_of)
     scenario = MODE_TO_SCENARIO[args.mode]
-    merged = runner.run(
+    batch = runner.batch(
         scenario, facts, existing=existing, tag_ids=tag_ids,
         user_keys=user_keys, computed_date=args.computed_date)
-
     guarded = None
-    if args.store and existing is not None and scenario != 1:
-        # every scenario except full-overwrite is a per-key upsert: fold
-        # the store back in (keys new ∪ old). Scenario 5 in particular
-        # overwrites ONLY the selected users' rows — without this fold it
-        # would wipe every other user's stored profile.
-        # The scenario output is one row per FACT row (profiles are a
-        # single-pass select, not a groupBy on the user key), so a fact
-        # table carrying duplicate user keys would fan out through the
-        # full-outer merge and silently duplicate store rows — guard it.
-        # Under the default "error" policy the probe persists the frame,
-        # so the scenario DAG computes once (probe and write both read
-        # the cache); --on-duplicates allow skips probe+persist entirely.
-        # The fold merges against the store frame already read above (for
-        # a bucketed store, the registered table scan, so the store side
-        # of the full-outer join runs Exchange-free).
-        from bigdata_tag_system_spark.sources.writers import (
-            merge_upsert_frames,
-            resolve_duplicate_keys,
-        )
+    if args.store:
+        # The batch is one row per FACT row (profiles are a single-pass
+        # select, not a groupBy on the user key), so a fact table carrying
+        # duplicate user keys would write duplicate store rows, and every
+        # later fold would keep them (each stored copy joins the batch
+        # row). Guard every keyed run, a first or full one included, on
+        # the batch before the stored tags are folded in (`dedupe` picks
+        # among batch rows). Under the default "error" policy the probe
+        # persists the batch, so the scenario DAG computes once (probe and
+        # write both read the cache); --on-duplicates allow skips
+        # probe+persist entirely. A dry run executes no probe: it prints
+        # the plan of the unguarded fold (`dedupe` is lazy and stays in).
+        from bigdata_tag_system_spark.sources.writers import resolve_duplicate_keys
 
-        guarded = resolve_duplicate_keys(
-            merged, [args.user_col], args.on_duplicates)
-        merged = merge_upsert_frames(guarded, existing, key_cols=[args.user_col])
+        policy = args.on_duplicates
+        if args.dry_run and policy == "error":
+            policy = "allow"
+        batch = guarded = resolve_duplicate_keys(batch, [args.user_col], policy)
+    # one full-outer join folds the batch into the store frame read above
+    # (for a bucketed store, the registered table scan, so the store side
+    # runs Exchange-free); users outside the batch keep their stored rows
+    merged = runner.fold(scenario, batch, existing)
 
     try:
         if args.dry_run:

@@ -14,16 +14,22 @@ from pyspark.sql import functions as F
 from bigdata_tag_system_spark.functions.sqlrender import attr, sql_lit
 
 
-def merged_tag_array(a: Column | str, b: Column | str) -> Column:
-    """Sorted distinct union of two int arrays; null-safe.
+def merged_tag_array(a: str, b: str) -> Column:
+    """Sorted distinct union of two int array columns (by name,
+    resolved like ``F.col``); null-safe.
 
     Canonical semantics for the reference's divergent pair
     (``tag_merger.py:213`` sorts, ``mysql_writer.py:178`` doesn't).
     """
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    empty = F.array().cast("array<int>")
-    return F.array_sort(F.array_distinct(F.array_union(F.coalesce(a, empty), F.coalesce(b, empty))))
+    return F.expr(merged_tag_array_sql(attr(a), attr(b)))
+
+
+def merged_tag_array_sql(a: str, b: str) -> str:
+    """The SQL text of :func:`merged_tag_array` over two SQL operands;
+    a NULL side counts as the empty set."""
+    empty = "CAST(array() AS ARRAY<INT>)"
+    return (f"array_sort(array_distinct(array_union("
+            f"coalesce({a}, {empty}), coalesce({b}, {empty}))))")
 
 
 def lit_double_array(values) -> Column:

@@ -29,6 +29,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bigdata_tag_system_spark.functions.arrays import merged_tag_array_sql
 from bigdata_tag_system_spark.functions.sqlrender import attr, ident
 
 
@@ -36,12 +37,6 @@ class MergeStrategy(str, Enum):
     OVERWRITE = "overwrite"          # MEMORY_ONLY: new wins wholesale
     UNION = "union"                  # MEMORY_THEN_DATABASE: set-union per user
     FULL_OUTER_UNION = "full_outer"  # spec §4.3: keep users present on either side
-
-
-def _sorted_union(a: str, b: str) -> str:
-    empty = "CAST(array() AS ARRAY<INT>)"
-    return (f"array_sort(array_distinct(array_union("
-            f"coalesce({a}, {empty}), coalesce({b}, {empty}))))")
 
 
 def merge_profiles(
@@ -75,15 +70,21 @@ def merge_profiles(
         old_cols.extend(f"{ident(c)} AS {ident('_old_' + c)}" for c in extra_cols)
     old = existing.selectExpr(*old_cols)
 
+    tag_ids = merged_tag_array_sql("tag_ids", "_old_tag_ids")
     if strategy == MergeStrategy.UNION:
         # Users only in `existing` keep their stored row untouched (the
         # reference merges only users present in the new batch,
         # advanced_tag_merger.py:52-67) → left join from new.
         joined = new.join(old, on=user_col, how="left")
     else:  # FULL_OUTER_UNION
-        joined = new.join(old, on=user_col, how="full_outer")
+        # the same rule over the whole store: a user the batch never saw
+        # comes back exactly as stored (tag_ids not re-sorted, NULL kept),
+        # so the batch side carries a presence flag through the join
+        joined = new.selectExpr("*", "true AS _in_batch").join(
+            old, on=user_col, how="full_outer")
+        tag_ids = f"CASE WHEN _in_batch THEN {tag_ids} ELSE _old_tag_ids END"
 
-    out_cols = [user, f"{_sorted_union('tag_ids', '_old_tag_ids')} AS tag_ids"]
+    out_cols = [user, f"{tag_ids} AS tag_ids"]
     for c in new.columns:
         if c in (user_col, "tag_ids"):
             continue

@@ -29,6 +29,8 @@ from typing import Callable, Iterable, Sequence
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata_tag_system_spark.functions.sqlrender import attr, ident
+
 # plain or schema-qualified SQL identifier (the only shapes the DBAPI
 # sinks interpolate into statement text; values always bind-param)
 _IDENT_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*(\.[A-Za-z_][A-Za-z0-9_]*)?$")
@@ -608,21 +610,9 @@ def upsert_into_store(
         was_cached = new.is_cached
         new = resolve_duplicate_keys(new, key_cols, on_duplicates)
         cond = " AND ".join(f"t.`{k}` = s.`{k}`" for k in key_cols)
-        updates = {}
-        for c in new.columns:
-            if c in key_cols:
-                continue
-            if c in array_union_cols:
-                updates[c] = (
-                    f"CASE WHEN s.`{c}` IS NOT NULL AND t.`{c}` IS NOT NULL "
-                    f"THEN array_sort(array_distinct(array_union(s.`{c}`, t.`{c}`))) "
-                    f"ELSE coalesce(s.`{c}`, t.`{c}`) END"
-                )
-            else:
-                # coalesce mirrors merge_upsert_frames exactly: new beats
-                # stored, but a NULL in the new batch never erases a
-                # stored value — the two routes must stay byte-identical
-                updates[c] = f"coalesce(s.`{c}`, t.`{c}`)"
+        updates = {
+            c: _upsert_column_sql(c, "s", "t", c in array_union_cols)
+            for c in new.columns if c not in key_cols}
         (
             DeltaTable.forPath(spark, path).alias("t")
             .merge(new.alias("s"), cond)
@@ -685,7 +675,7 @@ def parquet_merge_upsert(
     unpersist ``new`` after materializing, or pass ``allow`` when
     uniqueness is guaranteed upstream (e.g. a groupBy-on-key output) to
     skip probe and persist entirely. Callers that already hold the store
-    as a DataFrame (the CLI scenario path) call
+    as a DataFrame (``ScenarioRunner.fold``) call
     :func:`merge_upsert_frames` instead and skip the second store read.
     """
     new = resolve_duplicate_keys(new, key_cols, on_duplicates)
@@ -711,23 +701,36 @@ def merge_upsert_frames(
     Callers own duplicate-key policy (:func:`resolve_duplicate_keys`).
     """
     keys = list(key_cols)
-    n = new.alias("n")
-    e = existing.alias("e")
-    joined = n.join(e, on=keys, how="full_outer")
-    out_cols: list = [F.col(k) for k in keys]
+    joined = new.alias("n").join(existing.alias("e"), on=keys, how="full_outer")
+    out_cols = [attr(k) for k in keys]
     for c in new.columns:
         if c in keys:
             continue
-        nc, ec = F.col(f"n.{c}"), F.col(f"e.{c}") if c in existing.columns else F.lit(None)
-        if c in array_union_cols:
-            merged = F.when(
-                nc.isNotNull() & ec.isNotNull(),
-                F.array_sort(F.array_distinct(F.array_union(nc, ec))),
-            ).otherwise(F.coalesce(nc, ec))
-        else:
-            merged = F.coalesce(nc, ec)  # last-writer-wins: new beats stored
-        out_cols.append(merged.alias(c))
-    return joined.select(*out_cols)
+        old = "e" if c in existing.columns else None
+        rule = _upsert_column_sql(c, "n", old, c in array_union_cols)
+        out_cols.append(f"{rule} AS {ident(c)}")
+    return joined.selectExpr(*out_cols)
+
+
+def _upsert_column_sql(
+    col: str, new: str, old: str | None, array_union: bool = False,
+) -> str:
+    """The upsert rule for one non-key column, as SQL text over the
+    relation aliases ``new`` and ``old`` (``None``: the store lacks the
+    column). Last writer wins: the new value, falling back to the stored
+    one, so a NULL in the batch never erases a stored value; an
+    ``array_union`` column takes the sorted set-union when both sides
+    hold one. :func:`merge_upsert_frames` and the Delta ``MERGE`` of
+    :func:`upsert_into_store` both render it, so the two routes agree.
+    """
+    n = f"{new}.{ident(col)}"
+    o = f"{old}.{ident(col)}" if old else "NULL"
+    keep = f"coalesce({n}, {o})"
+    if not array_union:
+        return keep
+    return (f"CASE WHEN {n} IS NOT NULL AND {o} IS NOT NULL "
+            f"THEN array_sort(array_distinct(array_union({n}, {o}))) "
+            f"ELSE {keep} END")
 
 
 def snapshot_diff(
