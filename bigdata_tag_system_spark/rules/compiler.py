@@ -409,8 +409,10 @@ def _sql_like(value: Any, prefix: str = "%", suffix: str = "%") -> str:
 
 class _AnsiWalker(_ConditionWalker):
     """The portable subset (runs unchanged on Spark SQL, DuckDB, MySQL 8,
-    Postgres). Regex and array operators are deliberately NOT here —
-    their syntax is engine-specific; keep those rules on the compiler."""
+    Postgres, except string values holding a backslash or ``${``: see
+    :func:`rule_to_sql`). Regex and array operators are deliberately NOT
+    here — their syntax is engine-specific; keep those rules on the
+    compiler."""
 
     operators = (
         _COMPARISON_OPS | _NULL_OPS
@@ -494,5 +496,15 @@ def rule_to_sql(
     walker, so semantics, including 3VL and NOT-of-conjunction groups,
     match :func:`compile_rule` — tested by counting both paths on the
     same data.
+
+    String values render as ANSI literals: a quote is doubled, and a
+    backslash or ``${x}`` is plain data. Spark SQL reads the same text
+    differently: a backslash starts an escape, and ``${...}`` is variable
+    substitution (``spark.sql.variable.substitute``); MySQL without
+    ``NO_BACKSLASH_ESCAPES`` also reads backslash escapes. A value
+    holding either therefore matches another string there. The text is
+    meant for engines that follow the standard, so such values are not
+    refused; on Spark, evaluate the rule through :func:`compile_rule`,
+    whose literals are escaped for Spark's parser.
     """
     return _AnsiWalker(as_of=as_of).render(conditions)

@@ -59,6 +59,12 @@ def get_spark(
         "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
         # Keep partition sizes bounded when scanning wide fact tables.
         "spark.sql.files.maxPartitionBytes": "128m",
+        # zstd, not snappy, for every parquet write: the profile store is
+        # read and rewritten whole by each keyed tag job, and most of its
+        # bytes are the per-hit `reason` text, which snappy barely
+        # compresses (benchmark store: 210 → 128 B/user). Readers need no
+        # setting: the codec is recorded per column chunk.
+        "spark.sql.parquet.compression.codec": "zstd",
         # Timestamps in testdata are TIMESTAMP_NTZ-ish parquet; keep session
         # TZ fixed for deterministic date arithmetic across engines.
         "spark.sql.session.timeZone": "UTC",

@@ -101,3 +101,19 @@ def golden_rules():
     from bigdata_tag_system_spark.rules.model import load_rules
 
     return load_rules(RULES)
+
+
+def parquet_codecs(path) -> set[str]:
+    """The codec of every column chunk of every parquet file under
+    ``path``, as ``pyarrow.parquet`` reports it (``"ZSTD"``, ...)."""
+    import pyarrow.parquet as pq
+
+    codecs = set()
+    for root, _, files in os.walk(path):
+        for name in files:
+            if name.endswith(".parquet"):
+                meta = pq.read_metadata(os.path.join(root, name))
+                codecs |= {meta.row_group(g).column(c).compression
+                           for g in range(meta.num_row_groups)
+                           for c in range(meta.num_columns)}
+    return codecs

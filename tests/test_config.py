@@ -88,6 +88,25 @@ class TestSessionAndCLI:
             spark.conf.set("spark.sql.shuffle.partitions", before)
             spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
+    def test_session_writes_zstd_unless_profile_sets_codec(self, spark, tmp_path):
+        # zstd is a session default, not an option: a profile's extra_conf
+        # still wins over it, as over every other default
+        from .conftest import parquet_codecs
+
+        key = "spark.sql.parquet.compression.codec"
+        before = spark.conf.get(key)
+        try:
+            for codec, extra in (("ZSTD", {}), ("SNAPPY", {key: "snappy"})):
+                env = EnvConfig(name="t", spark=SparkProfile(extra_conf=extra))
+                s = env.session(app_name="codec-probe")
+                out = str(tmp_path / codec)
+                s.range(100).selectExpr("id", "repeat('tag ', 20) AS reason") \
+                    .write.parquet(out)
+                assert parquet_codecs(out) == {codec}
+        finally:
+            # the suite shares one session
+            spark.conf.set(key, before)
+
     def test_cli_env_supplies_defaults(self, spark, tmp_path):
         # an env JSON carrying store path + rules + bucket count replaces
         # --store/--rules/--store-buckets/--user-col on the command line

@@ -936,6 +936,29 @@ class TestRuleToSql:
             rule_to_sql({"field": "x", "operator": "matches",
                          "value": "a.*b"})
 
+    def test_backslash_and_substitution_render_as_ansi_data(self):
+        # ANSI text: a backslash and `${x}` stay plain characters (Spark
+        # SQL would read them as an escape and a variable; documented,
+        # not refused). DuckDB follows the standard and matches each
+        # value exactly.
+        import duckdb
+
+        from bigdata_tag_system_spark.rules.compiler import rule_to_sql
+
+        backslash = rule_to_sql({"field": "name", "operator": "=",
+                                 "value": "C:\\tmp\\x", "type": "string"})
+        assert backslash == r"(name = 'C:\tmp\x')"
+        dollar = rule_to_sql({"field": "name", "operator": "contains",
+                              "value": "${x}", "type": "string"})
+        assert dollar == "(name LIKE '%${x}%' ESCAPE '!')"
+        con = duckdb.connect()
+        con.execute("create table t (name varchar)")
+        con.executemany("insert into t values (?)",
+                        [["C:\\tmp\\x"], ["${x}"], ["C:\tmp"], ["x"]])
+        for where, want in ((backslash, "C:\\tmp\\x"), (dollar, "${x}")):
+            got = con.execute(f"select name from t where {where}").fetchall()
+            assert got == [(want,)]
+
     def test_group_semantics_match_column_compiler(self, spark):
         from bigdata_tag_system_spark.rules.compiler import (
             compile_rule, rule_to_sql,
