@@ -73,10 +73,10 @@ def build_parser() -> argparse.ArgumentParser:
                    help="duplicate-user-key policy for every run with "
                         "--store: the scenario batch is one row per FACT row, "
                         "so a fact table with duplicate user keys would write "
-                        "duplicate store rows. error (default) raises with "
-                        "sample keys (not under --dry-run); dedupe keeps "
+                        "duplicate store rows. error (default) raises, "
+                        "naming a duplicate key; dedupe keeps "
                         "one deterministic batch row per key, before the "
-                        "stored tags are merged in; allow skips the probe "
+                        "stored tags are merged in; allow skips the check "
                         "when uniqueness is guaranteed upstream")
     p.add_argument("--tag-ids", help="comma-separated tag ids (tags/user-tags modes)")
     p.add_argument("--user-ids", help="comma-separated user ids (users/user-tags modes)")
@@ -235,22 +235,31 @@ def main(argv: list[str] | None = None) -> int:
         raise SystemExit("no active rules loaded (--rules)")
     facts = _load_facts(spark, args.facts, rules, args.user_col)
 
-    from bigdata_tag_system_spark.sources.writers import read_store_if_exists
+    from bigdata_tag_system_spark.operators.tagging import profile_schema
+    from bigdata_tag_system_spark.sources.writers import (
+        _rewrite_store,
+        as_duplicate_key_error,
+        read_store_if_exists,
+        resolve_duplicate_keys,
+    )
 
+    # the store holds the engine's profiles: read it with their schema,
+    # not one inferred from a footer
+    key_type = facts.schema[args.user_col].dataType.simpleString()
+    store_schema = profile_schema(args.user_col, key_type)
     if args.store and args.store_buckets:
         from bigdata_tag_system_spark.sources.bucketed_store import read_bucketed_store
 
         existing = read_bucketed_store(
-            spark, args.store, args.user_col, args.store_buckets)
+            spark, args.store, args.user_col, args.store_buckets, store_schema)
     elif args.store:
-        existing = read_store_if_exists(spark, args.store)
+        existing = read_store_if_exists(spark, args.store, store_schema)
     else:
         existing = None
 
     tag_ids = [int(x) for x in args.tag_ids.split(",")] if args.tag_ids else None
     user_keys = args.user_ids.split(",") if args.user_ids else None
-    if user_keys and dict(facts.dtypes).get(args.user_col, "").startswith(
-            ("int", "bigint", "long")):
+    if user_keys and key_type.startswith(("int", "bigint", "long")):
         user_keys = [int(x) for x in user_keys]
 
     runner = ScenarioRunner(rules, user_col=args.user_col, as_of=args.as_of)
@@ -258,7 +267,6 @@ def main(argv: list[str] | None = None) -> int:
     batch = runner.batch(
         scenario, facts, existing=existing, tag_ids=tag_ids,
         user_keys=user_keys, computed_date=args.computed_date)
-    guarded = None
     if args.store:
         # The batch is one row per FACT row (profiles are a single-pass
         # select, not a groupBy on the user key), so a fact table carrying
@@ -266,49 +274,36 @@ def main(argv: list[str] | None = None) -> int:
         # later fold would keep them (each stored copy joins the batch
         # row). Guard every keyed run, a first or full one included, on
         # the batch before the stored tags are folded in (`dedupe` picks
-        # among batch rows). Under the default "error" policy the probe
-        # persists the batch, so the scenario DAG computes once (probe and
-        # write both read the cache); --on-duplicates allow skips
-        # probe+persist entirely. A dry run executes no probe: it prints
-        # the plan of the unguarded fold (`dedupe` is lazy and stays in).
-        from bigdata_tag_system_spark.sources.writers import resolve_duplicate_keys
-
-        policy = args.on_duplicates
-        if args.dry_run and policy == "error":
-            policy = "allow"
-        batch = guarded = resolve_duplicate_keys(batch, [args.user_col], policy)
+        # among batch rows); `error` is a check inside the write's plan.
+        if args.store_buckets:
+            # bucket-partitioned, the guard shares the join's one Exchange
+            batch = batch.repartition(args.store_buckets, args.user_col)
+        batch = resolve_duplicate_keys(batch, [args.user_col], args.on_duplicates)
     # one full-outer join folds the batch into the store frame read above
     # (for a bucketed store, the registered table scan, so the store side
     # runs Exchange-free); users outside the batch keep their stored rows
     merged = runner.fold(scenario, batch, existing)
 
-    try:
-        if args.dry_run:
-            merged.explain("formatted")
+    if args.dry_run:
+        merged.explain("formatted")
+        with as_duplicate_key_error():
             print(f"rows: {merged.count()}")
-            return 0
-
-        target = args.output or args.store
-        if not target:
-            raise SystemExit("--store or --output required (or use --dry-run)")
-        if target == args.store and args.store_buckets:
-            from bigdata_tag_system_spark.sources.bucketed_store import write_bucketed_store
-
-            write_bucketed_store(
-                spark, merged, target, args.user_col, args.store_buckets)
-        elif target == args.store and existing is not None:
-            # parquet can't be rewritten while its scan is live: stage then swap
-            from bigdata_tag_system_spark.sources.writers import _rewrite_store
-
-            _rewrite_store(merged, target)
-        else:
-            merged.write.mode("overwrite").parquet(target)
-        print(f"wrote scenario {scenario} result to {target}")
         return 0
-    finally:
-        # release the duplicate-probe cache once the write has consumed it
-        if guarded is not None and guarded.is_cached:
-            guarded.unpersist()
+
+    target = args.output or args.store
+    if not target:
+        raise SystemExit("--store or --output required (or use --dry-run)")
+    if target == args.store and args.store_buckets:
+        from bigdata_tag_system_spark.sources.bucketed_store import write_bucketed_store
+
+        write_bucketed_store(
+            spark, merged, target, args.user_col, args.store_buckets)
+    else:
+        # stage then swap: parquet can't be rewritten while its scan is
+        # live, and a failing write leaves the target as it was
+        _rewrite_store(merged, target)
+    print(f"wrote scenario {scenario} result to {target}")
+    return 0
 
 
 if __name__ == "__main__":

@@ -40,7 +40,7 @@ from typing import Iterable, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bigdata_tag_system_spark.functions.sqlrender import attr, sql_lit
+from bigdata_tag_system_spark.functions.sqlrender import attr, ident, sql_lit
 from bigdata_tag_system_spark.rules.compiler import RuleCompiler, check_parser
 from bigdata_tag_system_spark.rules.model import Rule, ordered_fields, required_fields
 
@@ -98,12 +98,21 @@ def _reason_sql(node) -> str:
     return _leaf_reason(node)
 
 
-# typed empty detail array, so map_from_entries/explode still resolve
-_EMPTY_DETAILS = (
-    "CAST(array() AS ARRAY<STRUCT<key: STRING, value: STRUCT<tag_name: STRING, "
-    "tag_category: STRING, rule_id: INT, rule_version: STRING, value: STRING, "
-    "reason: STRING, hit_time: TIMESTAMP>>>)"
+# one hit's detail, the value type of a profile's tag_details map
+_DETAIL_STRUCT = (
+    "STRUCT<tag_name: STRING, tag_category: STRING, rule_id: INT, "
+    "rule_version: STRING, value: STRING, reason: STRING, hit_time: TIMESTAMP>"
 )
+# typed empty detail array, so map_from_entries/explode still resolve
+_EMPTY_DETAILS = f"CAST(array() AS ARRAY<STRUCT<key: STRING, value: {_DETAIL_STRUCT}>>)"
+
+
+def profile_schema(user_col: str, key_type: str) -> str:
+    """DDL of :meth:`TagEngine.profiles` (with details), whose rows the
+    result store holds: read a store with it and no job infers it from
+    a parquet footer. ``key_type`` is the fact tables' user-key type."""
+    return (f"{ident(user_col)} {key_type}, tag_ids ARRAY<INT>, "
+            f"tag_details MAP<STRING, {_DETAIL_STRUCT}>, computed_date DATE")
 
 
 class TagEngine:

@@ -40,6 +40,9 @@ class Rule:
 
     @classmethod
     def from_row(cls, row: dict[str, Any]) -> "Rule":
+        # a NULL catalog field (e.g. a rule whose definition row is missing
+        # from a left join) is an absent one, so its default applies
+        row = {k: v for k, v in row.items() if v is not None}
         cond = row.get("rule_conditions") or row.get("conditions") or {}
         if isinstance(cond, str):
             cond = json.loads(cond) if cond.strip() else {}

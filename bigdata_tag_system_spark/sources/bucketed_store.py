@@ -16,9 +16,9 @@ The reference has no equivalent (its store is MySQL,
 Bucket metadata normally lives in a persistent metastore. The engine
 runs metastore-less (in-memory catalog), so the store is re-registered
 each session as an EXTERNAL bucketed table over its directory: the DDL
-is rebuilt from the parquet footer schema, and the bucketed file layout
-on disk (bucket id embedded in each file name by the bucketed write) is
-what actually carries across runs. ``num_buckets`` must stay constant
+is the caller's known schema (or the parquet footer's), and the bucketed
+file layout on disk (bucket id embedded in each file name by the
+bucketed write) is what actually carries across runs. ``num_buckets`` must stay constant
 for the lifetime of a store directory — it is part of the on-disk
 layout; size it so one bucket of the store fits an executor core's
 working memory at target scale (e.g. 1 B users × ~100 B/profile row /
@@ -67,29 +67,27 @@ def _validate_layout(path: str, key: str, num_buckets: int) -> None:
             f"count/key cannot change for the life of a store directory")
 
 
-def _register(spark: SparkSession, path: str, key: str, num_buckets: int) -> str:
-    """(Re)create the external bucketed table entry over ``path``."""
+def read_bucketed_store(
+    spark: SparkSession, path: str, key: str, num_buckets: int,
+    schema: str | None = None,
+) -> DataFrame | None:
+    """Store as a DataFrame whose scan carries bucket metadata (None when
+    the store doesn't exist yet): (re)creates the external bucketed table
+    entry over ``path``. A known ``schema`` (DDL) spares the job that
+    reads it from a parquet footer."""
+    if not os.path.isdir(path):
+        return None
     _validate_layout(path, key, num_buckets)
     name = _table_name(path)
     loc = os.path.abspath(path)
-    schema = spark.read.parquet(loc).schema
+    schema = schema or _schema_ddl(spark.read.parquet(loc).schema)
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     spark.sql(
-        f"CREATE TABLE {name} ({_schema_ddl(schema)}) USING PARQUET "
+        f"CREATE TABLE {name} ({schema}) USING PARQUET "
         f"CLUSTERED BY (`{key}`) SORTED BY (`{key}`) INTO {num_buckets} BUCKETS "
         f"LOCATION '{loc}'"
     )
-    return name
-
-
-def read_bucketed_store(
-    spark: SparkSession, path: str, key: str, num_buckets: int
-) -> DataFrame | None:
-    """Store as a DataFrame whose scan carries bucket metadata
-    (None when the store doesn't exist yet)."""
-    if not os.path.isdir(path):
-        return None
-    return spark.table(_register(spark, path, key, num_buckets))
+    return spark.table(name)
 
 
 def write_bucketed_store(

@@ -23,13 +23,15 @@ On Delta-capable clusters this maps 1:1 onto ``MERGE INTO``.
 
 from __future__ import annotations
 
+import contextlib
 import re
 from typing import Callable, Iterable, Sequence
 
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from bigdata_tag_system_spark.functions.sqlrender import attr, ident
+from bigdata_tag_system_spark.functions.sqlrender import attr, ident, sql_lit
 
 # plain or schema-qualified SQL identifier (the only shapes the DBAPI
 # sinks interpolate into statement text; values always bind-param)
@@ -253,6 +255,10 @@ class DuplicateKeyError(ValueError):
     """A batch headed for a keyed sink contains duplicate keys."""
 
 
+# the message the in-plan guard raises, followed by the key it met
+_DUP_PREFIX = "duplicate keys in write batch: "
+
+
 def _orderable(dt) -> bool:
     """Whether Spark can sort on this type (maps are unorderable, and
     poison any array/struct that contains one)."""
@@ -277,16 +283,16 @@ def resolve_duplicate_keys(
     With duplicates, ``executemany`` upserts resolve last-writer-wins in
     partition-iteration order — nondeterministic across runs. Policies:
 
-    - ``error``   — raise :class:`DuplicateKeyError` with sample keys
-      (the reference's pre-write duplicate check). The frame is persisted
-      before the probe so (a) the upstream DAG isn't computed twice —
-      once for the probe, once for the write — and (b) a nondeterministic
-      input can't pass the probe yet write different, duplicated rows.
-      The sinks here ``unpersist()`` after their write completes; pass
-      ``allow`` to skip probe+persist entirely when uniqueness is
-      guaranteed upstream (e.g. output of a groupBy on the key).
+    - ``error``   — the reference's pre-write duplicate check, as a check
+      inside the plan: ``count(1) OVER (PARTITION BY key)`` plus a filter
+      that calls ``raise_error`` on a count above 1. Nothing runs here;
+      the action over the returned frame fails on the first duplicate
+      key (the sinks map that failure to :class:`DuplicateKeyError`
+      naming the key). The window hash-partitions and sorts by the key,
+      which a keyed join or aggregate downstream reuses.
     - ``dedupe``  — keep one deterministic row per key via ``max_by``
-      (hash aggregate, map-side combined — no window sort shuffle),
+      (hash aggregate, map-side combined; its Exchange is the one a
+      keyed join downstream needs),
       ordered by the *orderable* non-key columns only: map-typed columns
       (e.g. profile ``tag_details``) are carried in the value struct but
       excluded from the ordering, which Spark cannot sort on.
@@ -298,29 +304,36 @@ def resolve_duplicate_keys(
     if on_duplicates not in ("error", "dedupe"):
         raise ValueError(f"on_duplicates must be error|dedupe|allow, got {on_duplicates!r}")
     if on_duplicates == "error":
-        persisted_here = False
-        if not df.is_cached:
-            from pyspark.storagelevel import StorageLevel
-
-            df = df.persist(StorageLevel.MEMORY_AND_DISK)
-            persisted_here = True
-        dups = (
-            df.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") > 1).limit(5).collect()
+        part = ", ".join(attr(k) for k in keys)
+        shown = ", ".join(f"coalesce(CAST({attr(k)} AS STRING), 'NULL')" for k in keys)
+        msg = f"concat({sql_lit(_DUP_PREFIX)}, concat_ws(', ', {shown}))"
+        return (
+            df.selectExpr("*", f"count(1) OVER (PARTITION BY {part}) AS `_dup_n`")
+            .where(f"CASE WHEN `_dup_n` > 1 THEN raise_error({msg}) ELSE true END")
+            .drop("_dup_n")
         )
-        if dups:
-            if persisted_here:  # no write will follow — don't leak the cache
-                df.unpersist()
-            sample = [tuple(r[k] for k in keys) for r in dups]
-            raise DuplicateKeyError(
-                f"duplicate keys in write batch (sample): {sample}")
-        return df
     row = F.struct(*[F.col(c) for c in df.columns])
     order_cols = [F.col(f.name) for f in df.schema.fields
                   if f.name not in keys and _orderable(f.dataType)]
     order = F.struct(*order_cols) if order_cols else F.lit(1)
     agg = df.groupBy(*keys).agg(F.max_by(row, order).alias("_row"))
-    return agg.select(*[F.col(f"_row.{c}").alias(c) for c in df.columns])
+    # the grouping keys, not their _row copies, keep the output
+    # hash-partitioned by the key for a keyed join downstream
+    return agg.select(*[F.col(c) if c in keys else F.col(f"_row.{c}").alias(c)
+                        for c in df.columns])
+
+
+@contextlib.contextmanager
+def as_duplicate_key_error():
+    """Around an action: the :func:`resolve_duplicate_keys` guard's
+    failure surfaces as :class:`DuplicateKeyError` naming the key."""
+    try:
+        yield
+    except PySparkException as exc:
+        found = re.search(re.escape(_DUP_PREFIX) + r"(.*?)(?: SQLSTATE:|$)", str(exc), re.M)
+        if found is None:
+            raise
+        raise DuplicateKeyError(_DUP_PREFIX + found.group(1)) from exc
 
 
 def validate_store_contains(
@@ -386,21 +399,13 @@ def jdbc_upsert(
     Duplicate keys WITHIN the batch would make the upsert outcome depend
     on executemany order — guarded by :func:`resolve_duplicate_keys`
     (reference pre-write check, ``mysql_writer.py:273-283``); pass
-    ``on_duplicates="allow"`` to skip the probe when uniqueness is
-    guaranteed upstream.
+    ``on_duplicates="allow"`` to skip the check when uniqueness is
+    guaranteed upstream. This sink commits per partition, so under
+    ``error`` the guarded batch is persisted and counted (the count runs
+    the check, ``approx_rows`` or not) before any partition commits.
     """
-    was_cached = df.is_cached
-    df = resolve_duplicate_keys(df, key_cols, on_duplicates)
     cols = list(df.columns)
     sql = _upsert_sql(dialect, table, cols, list(key_cols))
-
-    # the probe's persist (if any) also makes this count a cache read
-    n = approx_rows if approx_rows is not None else df.count()
-    parts = max(1, min(max_partitions, n // max(1, rows_per_partition) or 1))
-    # always a real repartition: coalesce(1) would propagate up past the
-    # previous shuffle boundary and run the whole upstream pipeline in
-    # one task; the shuffle is negligible next to a DB-bound sink
-    out = df.repartition(parts, *key_cols)
 
     def _write_partition(rows: Iterable[Row]) -> None:
         conn = connection_factory()
@@ -419,10 +424,22 @@ def jdbc_upsert(
         finally:
             conn.close()  # type: ignore[attr-defined]
 
+    df = resolve_duplicate_keys(df, key_cols, on_duplicates)
+    guarded = on_duplicates == "error"
+    if guarded:
+        from pyspark.storagelevel import StorageLevel
+
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        out.foreachPartition(_write_partition)
+        with as_duplicate_key_error():
+            n = df.count() if guarded or approx_rows is None else approx_rows
+        parts = max(1, min(max_partitions, n // max(1, rows_per_partition) or 1))
+        # always a real repartition: coalesce(1) would propagate up past the
+        # previous shuffle boundary and run the whole upstream pipeline in
+        # one task; the shuffle is negligible next to a DB-bound sink
+        df.repartition(parts, *key_cols).foreachPartition(_write_partition)
     finally:
-        if df.is_cached and not was_cached:
+        if guarded:
             df.unpersist()
 
 
@@ -457,7 +474,8 @@ def jdbc_merge_upsert(
     (as ``upsert_jdbc_live`` does) or create it quoted yourself.
     Duplicate keys in ``df`` would make MERGE outcome nondeterministic
     (and Derby raises SQLSTATE 21000) — guarded by
-    :func:`resolve_duplicate_keys` before staging. Returns the MERGE's
+    :func:`resolve_duplicate_keys` in the staging write, so no MERGE
+    runs. Returns the MERGE's
     affected-row count.
 
     Works against any MERGE-capable JDBC database; exercised for REAL
@@ -470,8 +488,9 @@ def jdbc_merge_upsert(
     props = dict(properties or {})
     df = resolve_duplicate_keys(df, key_cols, "error")
     cols = list(df.columns)
-    df.write.jdbc(url=url, table=staging_table, mode="overwrite",
-                  properties=props)
+    with as_duplicate_key_error():
+        df.write.jdbc(url=url, table=staging_table, mode="overwrite",
+                      properties=props)
     jvm = spark._jvm
     conn = jvm.java.sql.DriverManager.getConnection(url)
     try:
@@ -497,16 +516,20 @@ def jdbc_merge_upsert(
         conn.close()
 
 
-def read_store_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
+def read_store_if_exists(
+    spark: SparkSession, path: str, schema: str | None = None,
+) -> DataFrame | None:
     """Read a parquet store; None ONLY when the path genuinely doesn't
     exist. Any other read failure (corrupt footer, permissions, transient
     object-store error) propagates — treating it as "empty store" would
-    make the next merge-rewrite silently drop every stored row.
+    make the next merge-rewrite silently drop every stored row. A known
+    ``schema`` (DDL) spares the job that infers it from a footer.
     """
     from pyspark.errors.exceptions.captured import AnalysisException
 
+    reader = spark.read.schema(schema) if schema else spark.read
     try:
-        return spark.read.parquet(path)
+        return reader.parquet(path)
     except AnalysisException as exc:
         cond = getattr(exc, "getErrorClass", lambda: "")() or ""
         if "PATH_NOT_FOUND" in cond or "Path does not exist" in str(exc):
@@ -549,8 +572,9 @@ def staged_swap_write(write_stage: Callable[[str], None], target: str) -> None:
     ``write_stage(stage_path)`` materializes the complete new content
     into a SIBLING of the target (same filesystem, so the swap is two
     atomic renames, never a copy); the old store is renamed aside, the
-    stage renamed in, the backup dropped. A crash between the renames
-    leaves either the old store in place or the old store at
+    stage renamed in, the backup dropped. A failing ``write_stage`` (e.g.
+    :class:`DuplicateKeyError`) removes the stage. A crash between the
+    renames leaves either the old store in place or the old store at
     ``<target>.__old__`` with the stage complete — never zero copies
     (the failure mode of rmtree-then-move). On object stores, writing a
     fresh versioned directory + repointing beats any in-place rewrite;
@@ -563,7 +587,12 @@ def staged_swap_write(write_stage: Callable[[str], None], target: str) -> None:
     stage, backup = f"{target}.__stage__", f"{target}.__old__"
     shutil.rmtree(stage, ignore_errors=True)
     shutil.rmtree(backup, ignore_errors=True)
-    write_stage(stage)
+    try:
+        with as_duplicate_key_error():
+            write_stage(stage)
+    except BaseException:
+        shutil.rmtree(stage, ignore_errors=True)
+        raise
     if not os.path.exists(target):
         os.rename(stage, target)
         return
@@ -598,7 +627,7 @@ def upsert_into_store(
     rows survive untouched; no stage-and-swap rewrite, readers see the
     commit atomically. Everywhere else it falls back to
     :func:`parquet_merge_upsert`, whose returned frame the caller
-    persists. Returns the post-merge store content either way, so both
+    writes. Returns the post-merge store content either way, so both
     paths compose identically (only the Delta path has already written).
 
     The store's on-disk format decides the route — a parquet directory
@@ -607,21 +636,19 @@ def upsert_into_store(
     if delta_available(spark) and _is_delta_store(path):
         from delta.tables import DeltaTable
 
-        was_cached = new.is_cached
         new = resolve_duplicate_keys(new, key_cols, on_duplicates)
         cond = " AND ".join(f"t.`{k}` = s.`{k}`" for k in key_cols)
         updates = {
             c: _upsert_column_sql(c, "s", "t", c in array_union_cols)
             for c in new.columns if c not in key_cols}
-        (
-            DeltaTable.forPath(spark, path).alias("t")
-            .merge(new.alias("s"), cond)
-            .whenMatchedUpdate(set=updates)
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-        if new.is_cached and not was_cached:
-            new.unpersist()
+        with as_duplicate_key_error():
+            (
+                DeltaTable.forPath(spark, path).alias("t")
+                .merge(new.alias("s"), cond)
+                .whenMatchedUpdate(set=updates)
+                .whenNotMatchedInsertAll()
+                .execute()
+            )
         return spark.read.format("delta").load(path)
     return parquet_merge_upsert(
         spark, new, path, key_cols, array_union_cols, on_duplicates)
@@ -670,11 +697,9 @@ def parquet_merge_upsert(
     Duplicate keys in ``new`` would fan out through the full-outer join
     (one output row per duplicate) — guarded by
     :func:`resolve_duplicate_keys`, same policies as :func:`jdbc_upsert`.
-    Under ``error`` the probe persists ``new`` (one compute, probe + write
-    both read the cache); the caller owns the returned frame's lifecycle —
-    unpersist ``new`` after materializing, or pass ``allow`` when
-    uniqueness is guaranteed upstream (e.g. a groupBy-on-key output) to
-    skip probe and persist entirely. Callers that already hold the store
+    Under ``error`` the check is part of the returned frame's plan: the
+    caller's action over it (e.g. :func:`staged_swap_write`) fails on a
+    duplicate key. Callers that already hold the store
     as a DataFrame (``ScenarioRunner.fold``) call
     :func:`merge_upsert_frames` instead and skip the second store read.
     """
@@ -855,10 +880,7 @@ def compact_parquet(
         shaped = df.repartitionByRange(n, *cols).sortWithinPartitions(*cols)
     else:
         shaped = df.repartition(n)
-    staged_swap_write(
-        lambda stage: shaped.write.mode("overwrite").parquet(stage),
-        path,
-    )
+    _rewrite_store(shaped, path)
     out = 0
     for root, _dirs, files in os.walk(path):
         out += sum(1 for f in files if f.endswith(".parquet"))

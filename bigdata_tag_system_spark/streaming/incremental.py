@@ -58,7 +58,7 @@ def additive_store_sink(
             merge_additive_aggregates,
         )
         from bigdata_tag_system_spark.sources.writers import (
-            read_store_if_exists, staged_swap_write,
+            _rewrite_store, read_store_if_exists,
         )
 
         if batch_id <= _last_applied():
@@ -68,9 +68,7 @@ def additive_store_sink(
         merged = part if store is None else merge_additive_aggregates(
             store, part, key_cols, sum_cols=sum_cols,
             count_col=count_col, max_cols=max_cols, min_cols=min_cols)
-        staged_swap_write(
-            lambda stage: merged.write.mode("overwrite").parquet(stage),
-            store_path)
+        _rewrite_store(merged, store_path)
         os.makedirs(marker_dir, exist_ok=True)
         with open(os.path.join(marker_dir, "last_batch"), "w") as f:
             f.write(str(batch_id))

@@ -8,6 +8,7 @@ import sqlite3
 import tempfile
 
 import pytest
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
 from bigdata_tag_system_spark.plans.scenarios import ScenarioRunner
@@ -125,6 +126,24 @@ class TestReaders:
         rules = read_rule_catalog(spark, f"{tmpdir_mod}/rules", f"{tmpdir_mod}/defs")
         assert rules[0].tag_name == "ten" and rules[0].tag_id == 10
         assert rules[0].conditions["conditions"][0]["field"] == "total_asset_value"
+
+    def test_rule_catalog_missing_definition_and_null_rule_id(self, spark, tmpdir_mod):
+        # the definitions left join gives tag 20 NULL name and category: a
+        # NULL field is an absent one, not the string 'None', and a NULL
+        # rule_id falls back to the tag id
+        cond = json.dumps(RULES[0]["rule_conditions"])
+        rules_df = spark.createDataFrame(
+            [(1, 10, cond, True), (None, 20, cond, None)],
+            "rule_id int, tag_id int, rule_conditions string, is_active boolean")
+        defs_df = spark.createDataFrame(
+            [(10, "ten", "cat")], "tag_id int, tag_name string, tag_category string")
+        write_parquet(rules_df, f"{tmpdir_mod}/rules_nodef")
+        write_parquet(defs_df, f"{tmpdir_mod}/defs_nodef")
+        rules = sorted(read_rule_catalog(spark, f"{tmpdir_mod}/rules_nodef",
+                                         f"{tmpdir_mod}/defs_nodef"),
+                       key=lambda r: r.tag_id)
+        assert [(r.rule_id, r.tag_id, r.tag_name, r.tag_category) for r in rules] == [
+            (1, 10, "ten", "cat"), (20, 20, "", "")]
 
 
 class TestSnapshotDiff:
@@ -315,8 +334,10 @@ class TestUpsertSinks:
 
         dup = spark.createDataFrame(
             [("u1", "a"), ("u1", "b"), ("u2", "c")], "user_id string, val string")
-        with pytest.raises(DuplicateKeyError, match="u1"):
-            parquet_merge_upsert(spark, dup, f"{tmpdir_mod}/missing2", ["user_id"])
+        # the check is in the returned frame's plan: its action raises
+        with pytest.raises(SparkRuntimeException, match="u1"):
+            parquet_merge_upsert(
+                spark, dup, f"{tmpdir_mod}/missing2", ["user_id"]).collect()
         # dedupe policy: deterministic winner (lexicographically greatest row)
         got = {r["user_id"]: r["val"] for r in
                resolve_duplicate_keys(dup, ["user_id"], "dedupe").collect()}
@@ -329,20 +350,29 @@ class TestUpsertSinks:
         got_map = {r["user_id"]: (r["val"], dict(r["tag_details"])) for r in
                    resolve_duplicate_keys(dup_map, ["user_id"], "dedupe").collect()}
         assert got_map == {"u1": ("b", {"t": "2"}), "u2": ("c", {"t": "3"})}
-        # the "error" probe persists the frame (probe + write read one
-        # compute; a nondeterministic input can't diverge between the two)
+        # the "error" guard caches nothing and runs no job until an action
         uniq = spark.createDataFrame([("u9", "z")], "user_id string, val string")
-        probed = resolve_duplicate_keys(uniq, ["user_id"], "error")
-        assert probed.is_cached
-        probed.unpersist()
-        # and the sqlite sink honors the same guard
+        sc = spark.sparkContext
+        sc.setJobGroup("dup_guard_lazy", "resolve_duplicate_keys")
+        try:
+            guarded = resolve_duplicate_keys(uniq, ["user_id"], "error")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert not guarded.is_cached
+        assert list(sc.statusTracker().getJobIdsForGroup("dup_guard_lazy")) == []
+        assert guarded.collect() == uniq.collect()
+        # and the sqlite sink honors the same guard, before any commit
         if os.path.exists(_DB_PATH):
             os.remove(_DB_PATH)
         conn = _sqlite_conn()
         conn.execute("CREATE TABLE t2 (user_id TEXT PRIMARY KEY, val TEXT)")
         conn.commit(); conn.close()
-        with pytest.raises(DuplicateKeyError):
-            jdbc_upsert(dup, _sqlite_conn, "t2", ["user_id"], dialect="sqlite")
+        with pytest.raises(DuplicateKeyError, match="u1"):
+            jdbc_upsert(dup, _sqlite_conn, "t2", ["user_id"], dialect="sqlite",
+                        approx_rows=3, batch_size=1)
+        conn = _sqlite_conn()
+        assert conn.execute("SELECT count(*) FROM t2").fetchone() == (0,)
+        conn.close()
         jdbc_upsert(dup, _sqlite_conn, "t2", ["user_id"], dialect="sqlite",
                     on_duplicates="dedupe")
         conn = _sqlite_conn()
@@ -703,6 +733,38 @@ class TestDeltaAdapter:
 
 
 class TestStoreReadSafety:
+    def test_failed_stage_write_leaves_store_and_no_stage(self, spark, tmp_path):
+        # a write that fails part-way (files already in the stage) must
+        # not leave the stage behind or touch the live store
+        from bigdata_tag_system_spark.sources.writers import (
+            DuplicateKeyError,
+            resolve_duplicate_keys,
+            staged_swap_write,
+        )
+
+        store = str(tmp_path / "swap_store")
+        spark.createDataFrame([("u1", "x")], "user_id string, val string") \
+            .write.parquet(store)
+        before = {n: open(os.path.join(store, n), "rb").read()
+                  for n in os.listdir(store)}
+
+        def _half_written(stage):
+            os.makedirs(stage)
+            open(os.path.join(stage, "part-0.parquet"), "wb").close()
+            raise OSError("disk full")
+
+        with pytest.raises(OSError, match="disk full"):
+            staged_swap_write(_half_written, store)
+        assert not os.path.exists(store + ".__stage__")
+        dup = resolve_duplicate_keys(spark.createDataFrame(
+            [("u1", "a"), ("u1", "b")], "user_id string, val string"),
+            ["user_id"], "error")
+        with pytest.raises(DuplicateKeyError, match="u1"):
+            staged_swap_write(lambda st: dup.write.parquet(st), store)
+        assert not os.path.exists(store + ".__stage__")
+        assert {n: open(os.path.join(store, n), "rb").read()
+                for n in os.listdir(store)} == before
+
     def test_missing_store_returns_none(self, spark, tmpdir_mod):
         from bigdata_tag_system_spark.sources.writers import read_store_if_exists
 

@@ -1,7 +1,8 @@
 """The store fold on the tag path: one full-outer join per job.
 
 ``ScenarioRunner.fold`` merges a scenario's batch into the whole store;
-the CLI runs batch → duplicate-key probe → fold → write. These tests pin
+the CLI runs batch → duplicate-key guard → fold → staged write, the
+guard a window inside the write's plan. These tests pin
 the fold to the two-step merge it replaced (``merge_profiles`` against
 the store, then ``merge_upsert_frames`` against it again), the
 store-only rows to their stored values, and each merge rule to one
@@ -97,6 +98,31 @@ def _read_store(spark, path, buckets):
     if buckets:
         return read_bucketed_store(spark, path, "user_id", buckets)
     return spark.read.parquet(path)
+
+
+def _files(path):
+    """Every file under a store directory, by relative path, with its
+    bytes (empty when the directory is absent)."""
+    out = {}
+    for root, _dirs, names in os.walk(path):
+        for n in names:
+            full = os.path.join(root, n)
+            with open(full, "rb") as fh:
+                out[os.path.relpath(full, path)] = fh.read()
+    return out
+
+
+def _dup_facts(spark, env, tmp_path):
+    """The fixture's facts with user_001 twice."""
+    f = spark.read.parquet(env["facts"])
+    path = str(tmp_path / "dup_facts")
+    f.unionByName(f.where("user_id = 'user_001'")).write.parquet(path)
+    return path
+
+
+def _plan_nodes(out: str, node: str) -> int:
+    """How many ``node`` operators a formatted explain lists."""
+    return len(re.findall(rf"^\(\d+\) {node}\b", out, flags=re.M))
 
 
 @pytest.fixture()
@@ -208,33 +234,82 @@ class TestCliFoldParity:
         from bigdata_tag_system_spark.cli import main
         from bigdata_tag_system_spark.sources.writers import DuplicateKeyError
 
-        f = spark.read.parquet(env["facts"])
-        dup_facts = str(tmp_path / "dup_facts")
-        f.unionByName(f.where("user_id = 'user_001'")).write.parquet(dup_facts)
+        dup_facts = _dup_facts(spark, env, tmp_path)
         with pytest.raises(DuplicateKeyError, match="user_001"):
             main(["--mode", mode, "--facts", dup_facts, "--rules", env["rules"],
                   "--store", env["store"], "--as-of", AS_OF, *extra])
         assert not os.path.exists(env["store"])
+        assert not os.path.exists(env["store"] + ".__stage__")
+
+    @pytest.mark.parametrize("buckets", [0, 4])
+    @pytest.mark.parametrize("mode, extra", [
+        ("tags", ["--tag-ids", "1"]),
+        ("full", []),
+    ])
+    def test_duplicate_keys_over_a_store_raise(self, spark, env, tmp_path,
+                                               mode, extra, buckets):
+        # the guard fails the staged write: the stage goes, and the store
+        # keeps every byte
+        from bigdata_tag_system_spark.cli import main
+        from bigdata_tag_system_spark.sources.writers import DuplicateKeyError
+
+        dup_facts = _dup_facts(spark, env, tmp_path)
+        _write_store(spark, STORE_ROWS, env["store"], buckets)
+        before = _files(env["store"])
+        with pytest.raises(DuplicateKeyError, match="user_001"):
+            main(["--mode", mode, "--facts", dup_facts, "--rules", env["rules"],
+                  "--store", env["store"], "--as-of", AS_OF,
+                  "--store-buckets", str(buckets), *extra])
+        assert _files(env["store"]) == before
+        assert not os.path.exists(env["store"] + ".__stage__")
 
     def test_dry_run_executes_no_probe(self, spark, env, tmp_path):
-        # the default `error` probe is a job over the persisted batch; a
-        # dry run prints the unguarded fold instead, duplicates and all
+        # the `error` guard is part of the plan the dry run counts: the
+        # count raises, and no cached batch appears in the plan
         from bigdata_tag_system_spark.cli import main
+        from bigdata_tag_system_spark.sources.writers import DuplicateKeyError
 
-        f = spark.read.parquet(env["facts"])
-        dup_facts = str(tmp_path / "dup_facts")
-        f.unionByName(f.where("user_id = 'user_001'")).write.parquet(dup_facts)
+        dup_facts = _dup_facts(spark, env, tmp_path)
         _write_store(spark, STORE_ROWS, env["store"], 0)
+        before = _files(env["store"])
+        argv = ["--mode", "tags", "--tag-ids", "1", "--facts", dup_facts,
+                "--rules", env["rules"], "--store", env["store"],
+                "--as-of", AS_OF, "--dry-run"]
+        buf = io.StringIO()
+        with redirect_stdout(buf), pytest.raises(DuplicateKeyError, match="user_001"):
+            main(argv)
+        assert "InMemoryRelation" not in buf.getvalue(), buf.getvalue()
+        assert _files(env["store"]) == before
+        # unguarded, the dry run counts the fold, duplicates and all
         buf = io.StringIO()
         with redirect_stdout(buf):
-            rc = main(["--mode", "tags", "--tag-ids", "1", "--facts", dup_facts,
+            rc = main([*argv, "--on-duplicates", "allow"])
+        assert rc == 0
+        # 5 stored users, user_005 new, user_001 twice (one per fact row)
+        assert "rows: 7" in buf.getvalue()
+
+    @pytest.mark.parametrize("buckets, policy, exchanges", [
+        (0, "error", 2), (0, "dedupe", 2), (4, "error", 1), (4, "dedupe", 1),
+    ])
+    def test_fold_plan_guard_adds_no_exchange(self, spark, env, buckets, policy,
+                                              exchanges):
+        # the guard rides the fold's shuffle: a plain store's join moves
+        # both sides once, a bucketed store's only the batch
+        from bigdata_tag_system_spark.cli import main
+
+        _write_store(spark, STORE_ROWS, env["store"], buckets)
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            rc = main(["--mode", "tags", "--tag-ids", "1,3", "--facts", env["facts"],
                        "--rules", env["rules"], "--store", env["store"],
-                       "--as-of", AS_OF, "--dry-run"])
+                       "--as-of", AS_OF, "--dry-run", "--on-duplicates", policy,
+                       "--store-buckets", str(buckets)])
         assert rc == 0
         out = buf.getvalue()
+        assert _plan_nodes(out, "Exchange") == exchanges, out
         assert "InMemoryRelation" not in out, out
-        # 5 stored users, user_005 new, user_001 twice (one per fact row)
-        assert "rows: 7" in out
+        if policy == "error":
+            assert _plan_nodes(out, "Window") == 1, out
 
 
 class TestFold:
@@ -329,6 +404,17 @@ def _plan(df) -> str:
 
 
 class TestOneSpelling:
+    def test_store_schema_is_the_profiles_schema(self, spark, users_df, golden_rules):
+        # the CLI reads the store with profile_schema; the profiles the
+        # engine writes must carry exactly those names and types
+        from bigdata_tag_system_spark.operators.tagging import TagEngine, profile_schema
+
+        got = TagEngine(golden_rules, as_of=AS_OF).profiles(users_df).schema
+        known = spark.createDataFrame([], profile_schema("user_id", "string")).schema
+        spelled = lambda schema: [(f.name, f.dataType.simpleString()) for f in schema]
+        assert spelled(got) == spelled(known)
+        assert spelled(known) == spelled(spark.createDataFrame([], PROFILE_SCHEMA).schema)
+
     def test_merged_tag_array_matches_column_build(self, spark):
         df = spark.createDataFrame(
             [(1, [3, 1, 3], [2, 2]), (2, None, [5, 4]), (3, [9, 7], None),
